@@ -21,7 +21,7 @@ object Catalog {
     */
   def tables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val mv = matViewNames()
+    val cat = SessionCatalog(spark)
     val rows = spark.catalog.listTables().collect().toSeq
       // __ux<hex> is the reversible mangling of a unicode table name
       // (DialectRewrites.quoteUnicodeIdents) — a REAL user table, listed
@@ -32,18 +32,17 @@ object Catalog {
       .zipWithIndex.map { case (t, i) =>
         val name = t.name // registry key (mangled for unicode names)
         val shown = graft.sql.RefText.demangleName(t.name)
-        val meta = Option(createMeta.get(name.toLowerCase))
-        val isMv = mv.contains(name.toLowerCase)
-        val mvMeta = Option(matViewMeta.get(name.toLowerCase))
+        val meta = cat.get(name).getOrElse(TableMeta())
+        val mvDef = meta.matView
+        val isMv = mvDef.isDefined
         val ts = Tables.designatedTs.get(name.toLowerCase)
-          .orElse(graft.sql.QuestSql.designatedTsOf(name.toLowerCase))
+          .orElse(cat.designatedTs(name))
           // a mat view inherits its base table's designated timestamp
-          .orElse(mvMeta.map(_._1).filter(_ != null).flatMap(b =>
-            graft.sql.QuestSql.designatedTsOf(b.toLowerCase)))
+          .orElse(mvDef.map(_.base).filter(_ != null).flatMap(cat.designatedTs))
           .orNull
         // reference MatViewDefinition default partitioning from the
         // SAMPLE BY stride: sub-hour → DAY, sub-day → WEEK, else YEAR
-        val mvPartition = mvMeta.map(_._2).filter(_ != null).flatMap { sql =>
+        val mvPartition = mvDef.map(_.sql).filter(_ != null).flatMap { sql =>
           """(?is)\bsample\s+by\s+(\d*)\s*([UTsmhdwMy])""".r.findFirstMatchIn(sql).map { sm =>
             val n = Option(sm.group(1)).filter(_.nonEmpty).map(_.toLong).getOrElse(1L)
             val us = sm.group(2) match {
@@ -55,39 +54,33 @@ object Catalog {
             if (us < 3600000000L) "DAY" else if (us < 86400000000L) "WEEK" else "YEAR"
           }
         }
-        val isView = plainViewReg.containsKey(name.toLowerCase)
-        val viewTs =
-          if (!isView) None
-          else Option(plainViewReg.get(name.toLowerCase)).flatMap { sql =>
-            """(?is)\bfrom\s+([A-Za-z_][\w.]*)""".r.findFirstMatchIn(sql)
-              .flatMap(fm => graft.sql.QuestSql.designatedTsOf(
-                fm.group(1).split('.').last.toLowerCase))
-          }
-        val wal = meta.exists(_.walEnabled)
-        val id = tableIdOf(name)
+        val isView = meta.plainView.isDefined
+        val viewTs = meta.plainView.flatMap { sql =>
+          """(?is)\bfrom\s+([A-Za-z_][\w.]*)""".r.findFirstMatchIn(sql)
+            .flatMap(fm => cat.designatedTs(fm.group(1)))
+        }
+        val wal = meta.walEnabled
+        val id = cat.idOf(name)
         // batch ts bounds fold from the write-time WAL txn registry —
         // O(#commits) metadata, never a data scan (reference seq
         // tracker; TablesFunctionFactoryTest table_min/max/wal_max)
         val (tsMin, tsMax) = {
-          import scala.jdk.CollectionConverters._
-          val recs = Option(walTxnLog.get(name.toLowerCase))
-            .map(_.asScala.toSeq).getOrElse(Seq.empty)
-          val mins = recs.flatMap(r => Option(r.minTs))
-          val maxs = recs.flatMap(r => Option(r.maxTs))
+          val mins = meta.txnLog.flatMap(r => Option(r.minTs))
+          val maxs = meta.txnLog.flatMap(r => Option(r.maxTs))
           (mins.sortBy(_.getTime).headOption.orNull,
             maxs.sortBy(-_.getTime).headOption.orNull)
         }
         (id, shown, viewTs.getOrElse(ts),
           if (isView) "N/A"
-          else meta.flatMap(_.partitionBy)
+          else meta.partitionBy
             .orElse(if (isMv) mvPartition else None).getOrElse("NONE"),
-          wal || isMv || isView, meta.exists(_.dedup),
-          meta.flatMap(_.ttl).map(_._1).getOrElse(0),
-          meta.flatMap(_.ttl).map(_._2).getOrElse("HOUR"),
+          wal || isMv || isView, meta.dedup,
+          meta.ttl.map(_._1).getOrElse(0),
+          meta.ttl.map(_._2).getOrElse("HOUR"),
           isMv,
           // WAL table dirs carry the table id suffix (reference ~<id>)
           if (wal || isMv || isView) s"$shown~$id" else shown + "~",
-          if (isView) 0 else meta.flatMap(_.maxUncommittedRows).getOrElse(1000L).toInt,
+          if (isView) 0 else meta.maxUncommittedRows.getOrElse(1000L).toInt,
           if (isView) 0L else if (isMv) -1L else 300000000L, false,
           if (isView) "V" else if (isMv) "M" else "T",
           // memory-pressure tracker exists only for WAL writers
@@ -156,12 +149,12 @@ object Catalog {
     * pre-registered test-fixture parquet views are not tables the
     * replayed session created, and the reference lists none of them
     * (ShowTablesTest). DDL re-creations of a fixture name stay listed
-    * (createMeta). Default off — the driver/spec context treats the
-    * fixture views as real tables. */
+    * (TableMeta.created). Default off — Verify, Bench and the specs
+    * treat the fixture views as real tables. */
   private[graft] def hideBaseline(spark: SparkSession, name: String): Boolean =
     spark.conf.getOption("graft.catalog.hideBaseline").contains("true") &&
       graft.Tables.names.contains(name.toLowerCase) &&
-      !createMeta.containsKey(name.toLowerCase)
+      !SessionCatalog(spark).get(name).exists(_.created)
 
   /** all_tables() — just the names (catalogue/AllTablesFunctionFactory). */
   def allTables(spark: SparkSession): DataFrame = {
@@ -170,79 +163,6 @@ object Catalog {
       .filterNot(_.name.startsWith("__"))
       .filterNot(t => hideBaseline(spark, t.name)).map(_.name).sorted
       .toDF("table_name")
-  }
-
-  case class CreateMeta(partitionBy: Option[String], walEnabled: Boolean,
-                        dedup: Boolean, ttl: Option[(Int, String)],
-                        maxUncommittedRows: Option[Long])
-
-  private[graft] val createMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, CreateMeta]()
-
-  private def matViewNames(): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    matViewReg.keySet.asScala.map(_.toLowerCase).toSet
-  }
-
-  // monotonic table ids (reference TableToken ids): assigned at CREATE,
-  // freed at DROP — a re-created table gets a fresh, larger id
-  private val tableIdCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val tableIds =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private[graft] def tableIdOf(name: String): Int =
-    tableIds.computeIfAbsent(name.toLowerCase, _ => tableIdCounter.incrementAndGet())
-
-  def registerCreateMeta(name: String, m: CreateMeta): Unit = {
-    createMeta.put(name.toLowerCase, m)
-    tableIdOf(name)
-  }
-
-  /** Column declarations (type spelling + storage knobs) remembered from
-    * CREATE so metadata functions can show SYMBOL/capacity/index facts
-    * Spark types don't carry. */
-  case class ColDecl(tpe: String, knobs: String)
-  private[graft] val declaredCols =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, ColDecl]]()
-
-  def registerDeclaredCols(table: String, cols: Seq[(String, String, String)]): Unit =
-    declaredCols.put(table.toLowerCase,
-      cols.map { case (n, t, k) => n.toLowerCase -> ColDecl(t, k) }.toMap)
-
-  /** Record a single column's declared type when no explicit decl exists
-    * (CTAS provenance — e.g. an `::ipv4` select item). Never overwrites
-    * an explicit declaration. */
-  private[graft] def mergeDeclaredCol(table: String, col: String, tpe: String): Unit = {
-    val key = table.split('.').last.toLowerCase
-    val cur = Option(declaredCols.get(key)).getOrElse(Map.empty)
-    if (!cur.contains(col.toLowerCase))
-      declaredCols.put(key, cur + (col.toLowerCase -> ColDecl(tpe, "")))
-  }
-
-  /** Replace one column's storage knobs (ALTER COLUMN ADD/DROP INDEX),
-    * keeping its declared type; creates the decl from the live schema
-    * when the table had no explicit column list. */
-  private[graft] def updateColKnobs(table: String, col0: String, knobs: String): Unit = {
-    val key = table.split('.').last.toLowerCase
-    val c = col0.toLowerCase
-    val cur = Option(declaredCols.get(key)).getOrElse(Map.empty)
-    val tpe = cur.get(c).map(_.tpe).getOrElse("SYMBOL")
-    declaredCols.put(key, cur + (c -> ColDecl(tpe, knobs)))
-  }
-
-  /** DEDUP UPSERT KEYS per table (reference WAL dedup): the dialect
-    * INSERT path replaces existing rows on key collision. */
-  private[graft] val dedupKeysReg =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-  def registerDedupKeys(table: String, keys: Seq[String]): Unit =
-    dedupKeysReg.put(table.toLowerCase, keys)
-  def dedupKeysOf(table: String): Seq[String] =
-    Option(dedupKeysReg.get(table.toLowerCase)).getOrElse(Nil)
-
-  /** Every declared type spelling (uppercased) for a column name across
-    * all registered tables — provenance hints for output formatting. */
-  private[graft] def declaredTypesOf(colLower: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    declaredCols.values.asScala.flatMap(_.get(colLower)).map(_.tpe.toUpperCase).toSet
   }
 
   // ---- write-time symbol dictionaries --------------------------------
@@ -306,34 +226,16 @@ object Catalog {
       (if (overflowed) hllEstimate else values.size.toLong) +
         (if (hasNull) 1L else 0L)
   }
-  private[graft] val symbolDictReg =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.ConcurrentHashMap[String, SymDict]]()
-  private def dictKey(table: String) = table.split('.').last.toLowerCase
-  private[graft] def noteSymbolValues(table: String, col: String,
+  /** Add a write batch's distinct values to a column's dictionary. */
+  private[graft] def noteSymbolValues(spark: SparkSession, table: String, col: String,
                                       vals: Iterable[String], sawNull: Boolean): Unit = {
-    val m = symbolDictReg.computeIfAbsent(dictKey(table),
-      _ => new java.util.concurrent.ConcurrentHashMap[String, SymDict]())
-    val d = m.computeIfAbsent(col.toLowerCase, _ => new SymDict)
+    val c = col.toLowerCase
+    val d = SessionCatalog(spark).update(table) { m =>
+      if (m.symbols.contains(c)) m else m.copy(symbols = m.symbols + (c -> new SymDict))
+    }.symbols(c)
     vals.foreach(d.add)
     if (sawNull) d.hasNull = true
   }
-  /** DROP + TRUNCATE reset the symbol maps (reference TableWriter
-    * truncate() truncates its SymbolMapWriters). */
-  private[graft] def clearSymbolDicts(table: String): Unit =
-    symbolDictReg.remove(dictKey(table))
-  private[graft] def renameSymbolDicts(from: String, to: String): Unit =
-    Option(symbolDictReg.remove(dictKey(from)))
-      .foreach(symbolDictReg.put(dictKey(to), _))
-  private[graft] def dropSymbolDictCol(table: String, col: String): Unit =
-    Option(symbolDictReg.get(dictKey(table))).foreach(_.remove(col.toLowerCase))
-  private[graft] def renameSymbolDictCol(table: String, from: String, to: String): Unit =
-    Option(symbolDictReg.get(dictKey(table))).foreach { m =>
-      Option(m.remove(from.toLowerCase)).foreach(m.put(to.toLowerCase, _))
-    }
-  private def symbolTableSizeOf(table: String, col: String): Long =
-    Option(symbolDictReg.get(dictKey(table)))
-      .flatMap(m => Option(m.get(col.toLowerCase)))
-      .map(_.size).getOrElse(0L)
 
   /** table_columns(t) — the reference's 11-column shape
     * (catalogue/TableColumnsFunctionFactory). */
@@ -342,10 +244,10 @@ object Catalog {
 
   private[graft] def columnsOf(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val key = table.split('.').last.toLowerCase
-    val designated = graft.sql.QuestSql.designatedTsOf(key)
-      .orElse(Tables.designatedTs.get(key))
-    val decls = Option(declaredCols.get(key)).getOrElse(Map.empty)
+    val cat = SessionCatalog(spark)
+    val meta = cat.get(table)
+    val designated = cat.designatedTs(table)
+    val decls = meta.map(_.columns).getOrElse(Map.empty)
     spark.table(table).schema.fields.toSeq.map { f =>
       val d = decls.get(f.name.toLowerCase)
       val tpe = d.map(_.tpe).getOrElse(sqlTypeName(f.dataType))
@@ -357,7 +259,9 @@ object Catalog {
       val symCap = """(?<!INDEX )CAPACITY\s+(\d+)""".r.findFirstMatchIn(knobs)
         .map(_.group(1).toInt).getOrElse(if (isSymbol) 128 else 0)
       val cached = isSymbol && !knobs.contains("NOCACHE")
-      val symSize = if (isSymbol) symbolTableSizeOf(key, f.name) else 0L
+      val symSize =
+        if (isSymbol) meta.flatMap(_.symbols.get(f.name.toLowerCase)).map(_.size).getOrElse(0L)
+        else 0L
       (f.name, tpe, indexed, idxCap, cached, if (isSymbol) symCap else 0,
         symSize, designated.contains(f.name), false,
         if (indexed) "BITMAP" else "", "")
@@ -370,49 +274,27 @@ object Catalog {
   // conversion: CREATE ... FORMAT PARQUET, ALTER ... SET FORMAT,
   // ALTER ... CONVERT PARTITION TO PARQUET|NATIVE) --------------------------
 
-  /** table → is parquet the current format for NEW partitions */
-  private[graft] val tableFormatParquet =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  /** table → partition name → resolved format flag (set when the table
-    * format changes, or a partition is explicitly converted) */
-  private[graft] val partitionFormat =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]()
-
-  private def partMap(table: String) =
-    partitionFormat.computeIfAbsent(table.toLowerCase,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  private[graft] def setCreateFormat(table: String, parquet: Boolean): Unit =
-    tableFormatParquet.put(table.toLowerCase, parquet)
-
   /** ALTER TABLE SET FORMAT: existing partitions keep their resolved
     * flag; only partitions born later get the new format. */
   private[graft] def setTableFormat(spark: SparkSession, table: String, parquet: Boolean): Unit = {
-    val pm = partMap(table)
-    partitionNames(spark, table).foreach { p =>
-      pm.putIfAbsent(p, isPartParquet(table, p))
+    val names = partitionNames(spark, table)
+    SessionCatalog(spark).update(table) { m =>
+      m.copy(parquet = parquet, partitionParquet =
+        names.map(p => p -> m.partitionIsParquet(p)).toMap ++ m.partitionParquet)
     }
-    tableFormatParquet.put(table.toLowerCase, parquet)
   }
 
   /** ALTER TABLE CONVERT PARTITION TO PARQUET|NATIVE LIST/WHERE. */
   private[graft] def convertPartitions(spark: SparkSession, table: String,
                                        parquet: Boolean, list: Seq[String],
                                        whereTs: Option[java.sql.Timestamp => Boolean]): Unit = {
-    val pm = partMap(table)
     val names = partitionNames(spark, table)
     val targets = whereTs match {
       case Some(pred) => names.filter(p => partStartTs(p).exists(pred))
       case None => names.filter(p => list.exists(l => p == l || p.startsWith(l)))
     }
-    targets.foreach(p => pm.put(p, parquet))
-  }
-
-  private def isPartParquet(table: String, part: String): Boolean = {
-    val pm = partitionFormat.get(table.toLowerCase)
-    val explicit = if (pm != null) Option(pm.get(part)) else None
-    explicit.map(_.booleanValue).getOrElse(
-      Option(tableFormatParquet.get(table.toLowerCase)).exists(_.booleanValue))
+    SessionCatalog(spark).update(table)(m =>
+      m.copy(partitionParquet = m.partitionParquet ++ targets.map(_ -> parquet)))
   }
 
   private def partStartTs(part: String): Option[java.sql.Timestamp] = {
@@ -427,8 +309,8 @@ object Catalog {
     catch { case _: Exception => None }
   }
 
-  private def partitionUnit(table: String): String =
-    Option(createMeta.get(table.toLowerCase)).flatMap(_.partitionBy)
+  private def partitionUnit(spark: SparkSession, table: String): String =
+    SessionCatalog(spark).get(table).flatMap(_.partitionBy)
       .getOrElse("DAY").toUpperCase
 
   private def partitionNameExpr(unit: String, ts: String): String = unit match {
@@ -441,8 +323,8 @@ object Catalog {
 
   private def partitionNames(spark: SparkSession, table: String): Seq[String] =
     try {
-      val ts = graft.sql.QuestSql.designatedTsOf(table).getOrElse(return Seq.empty)
-      val unit = partitionUnit(table)
+      val ts = SessionCatalog(spark).designatedTs(table).getOrElse(return Seq.empty)
+      val unit = partitionUnit(spark, table)
       spark.table(table)
         .selectExpr(partitionNameExpr(unit, ts) + " AS p")
         .where("p IS NOT NULL").distinct().orderBy("p")
@@ -457,8 +339,10 @@ object Catalog {
     */
   def tablePartitionsFull(spark: SparkSession, table: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val unit = partitionUnit(table)
-    val tsOpt = graft.sql.QuestSql.designatedTsOf(table)
+    val unit = partitionUnit(spark, table)
+    val cat = SessionCatalog(spark)
+    val meta = cat.get(table).getOrElse(TableMeta())
+    val tsOpt = cat.designatedTs(table)
     val parts: Seq[(String, java.sql.Timestamp, java.sql.Timestamp, Long)] = tsOpt match {
       case Some(ts) =>
         try spark.table(table)
@@ -478,7 +362,7 @@ object Catalog {
       else s"$n B"
     val last = parts.size - 1
     val rows = parts.zipWithIndex.map { case ((p, mn, mx, n), i) =>
-      val parquet = isPartParquet(table, p)
+      val parquet = meta.partitionIsParquet(p)
       val bytes = n * 32L
       org.apache.spark.sql.Row(
         i, unit, p, mn, mx, n, bytes, human(bytes),
@@ -524,83 +408,6 @@ object Catalog {
   // LiveViewsFunctionFactory, MatViewsFunctionFactory,
   // functions/table/TableStorageFunctionFactory) ----------------------------
 
-  private val liveViewReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, () => Long)]()
-  private val matViewReg =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  /** name → (base table, stored SELECT) for matViews()/views() columns. */
-  private[graft] val matViewMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  /** plain CREATE VIEW registry (views() lists them too). */
-  private[graft] val plainViewReg =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Declarative pieces of a live view, for live_views() and SHOW CREATE
-    * LIVE VIEW (reference LiveViewsFunctionFactory /
-    * ShowCreateTableOperation live-view branch). */
-  final case class LiveViewMeta(base: String, sql: String,
-                                flushN: Long, flushUnit: String,
-                                memN: Long, memUnit: String,
-                                partitionBy: String, startFrom: String)
-  private[graft] val liveViewMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, LiveViewMeta]()
-
-  private[graft] def registerLiveView(name: String, tableDir: String, seam: () => Long): Unit =
-    liveViewReg.put(name, (tableDir, seam))
-
-  private[graft] def registerMatView(name: String, bucket: String, refresh: String): Unit =
-    matViewReg.put(name, (bucket, refresh))
-
-  private[graft] def unregisterMatView(name: String): Unit =
-    matViewReg.remove(name)
-
-  private[graft] def unregisterLiveView(name: String): Unit =
-    liveViewReg.remove(name)
-
-  /** Forget every per-table registration for `name` (DROP TABLE): a
-    * re-created table with the same name must not inherit stale
-    * declared columns, designated-ts/WAL state, or view registrations
-    * (those drive SAMPLE BY bucketing, avg rescale, SHOW COLUMNS,
-    * wal_tables(), live_views()). */
-  private[graft] def unregisterTable(name0: String): Unit = {
-    val name = name0.split('.').last.toLowerCase
-    createMeta.remove(name); declaredCols.remove(name); createTails.remove(name)
-    tableIds.remove(name)
-    dedupKeysReg.remove(name); symbolDictReg.remove(name)
-    walState.remove(name); walTxnLog.remove(name); walTxnCounter.remove(name)
-    matViewReg.remove(name); liveViewReg.remove(name); liveViewMeta.remove(name)
-    matViewMeta.remove(name); plainViewReg.remove(name)
-  }
-
-  /** RENAME migrates the per-table registries the new name must keep
-    * answering from (wal txn log/counter/state feed tables()' ts bounds
-    * and wal_tables(); declaredCols drives type semantics; dedup keys,
-    * create tails, table ids ride along) — reference TableNameRegistry
-    * rename keeps the table's state, only the name changes. */
-  private[graft] def migrateTableRegistries(from0: String, to0: String): Unit = {
-    val from = from0.split('.').last.toLowerCase
-    val to = to0.split('.').last.toLowerCase
-    def mv[V](m: java.util.concurrent.ConcurrentHashMap[String, V]): Unit =
-      Option(m.remove(from)).foreach(m.put(to, _))
-    mv(declaredCols); mv(createTails); mv(tableIds); mv(dedupKeysReg)
-    mv(walState); mv(walTxnLog); mv(walTxnCounter)
-  }
-
-  /** TRUNCATE resets write stats (reference TableWriter.truncate()):
-    * the txn log's ts bounds must not survive into tables() output. */
-  private[graft] def clearWalTxnLog(name: String): Unit =
-    walTxnLog.remove(name.split('.').last.toLowerCase)
-
-  /** DROP ALL: clear every per-table registry wholesale. */
-  private[graft] def clearTableRegistries(): Unit = {
-    createMeta.clear(); declaredCols.clear(); createTails.clear()
-    dedupKeysReg.clear(); symbolDictReg.clear()
-    walState.clear(); walTxnLog.clear(); walTxnCounter.clear()
-    matViewReg.clear(); liveViewReg.clear(); liveViewMeta.clear()
-    matViewMeta.clear(); plainViewReg.clear()
-    tableIds.clear(); tableIdCounter.set(0)
-  }
-
   /** live_views() — the reference's 53-column shape
     * (LiveViewsFunctionFactory.java:677-729). Declarative fields come
     * from the registered meta; arena/WAL/checkpoint counters surface
@@ -609,8 +416,10 @@ object Catalog {
     */
   def liveViews(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
-    val rows = liveViewReg.asScala.toSeq.sortBy(_._1).map { case (n, (dir, seam)) =>
-      val m = Option(liveViewMeta.get(n))
+    val lives = SessionCatalog(spark).views.collect { case (n, v: TableMeta.LiveView) => (n, v) }
+    val rows = lives.sortBy(_._1).map { case (n, lv) =>
+      val m = lv.spec
+      val seam = lv.seam
       val cnt = try spark.table(n).count() catch { case _: Exception => 0L }
       // interval units render as reference ChronoUnit names
       def unitName(u: String): String = u match {
@@ -680,10 +489,9 @@ object Catalog {
     * timestamps, view_sql, dir, invalidation, status). */
   def matViews(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    matViewReg.asScala.toSeq.map { case (n, (b, r)) =>
-      val (base, sql) = Option(matViewMeta.get(n)).getOrElse((null, null))
-      (n, r, base, null: java.sql.Timestamp, null: java.sql.Timestamp,
-        sql, n, null: String, "valid", b)
+    SessionCatalog(spark).views.collect { case (n, m: TableMeta.MatView) =>
+      (n, m.refreshKind, m.base, null: java.sql.Timestamp, null: java.sql.Timestamp,
+        m.sql, n, null: String, "valid", m.bucket)
     }.toDF("view_name", "refresh_type", "base_table_name",
       "last_refresh_start_timestamp", "last_refresh_finish_timestamp",
       "view_sql", "view_table_dir_name", "invalidation_reason",
@@ -694,59 +502,27 @@ object Catalog {
     * ViewsFunctionFactory column set. */
   def views(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val mats = matViewReg.asScala.keys.toSeq.map { n =>
-      val (_, sql) = Option(matViewMeta.get(n)).getOrElse((null, null))
-      (n, sql, n, null: String, "valid", null: java.sql.Timestamp)
-    }
-    val lives = liveViewReg.asScala.keys.toSeq.map { n =>
-      val sql = Option(liveViewMeta.get(n)).map(_.sql).orNull
-      (n, sql, n, null: String, "valid", null: java.sql.Timestamp)
-    }
-    val plains = plainViewReg.asScala.toSeq.map { case (n, sql) =>
-      (n, sql, n, null: String, "valid", null: java.sql.Timestamp)
-    }
-    (mats ++ lives ++ plains).distinct.toDF("view_name", "view_sql",
+    val all = SessionCatalog(spark).views
+    def rows(pick: PartialFunction[TableMeta.View, String]) =
+      all.collect { case (n, v) if pick.isDefinedAt(v) =>
+        (n, pick(v), n, null: String, "valid", null: java.sql.Timestamp) }
+    (rows { case m: TableMeta.MatView => m.sql } ++
+      rows { case l: TableMeta.LiveView => l.spec.map(_.sql).orNull } ++
+      rows { case TableMeta.PlainView(sql) => sql }).distinct.toDF("view_name", "view_sql",
       "view_table_dir_name", "invalidation_reason", "view_status",
       "view_status_update_time")
   }
 
-  /** wal_tables() — ingest-dir tables (the WAL-apply analogue: day
-    * partitions + batch markers).
-    */
-  /** Per-table WAL bookkeeping for wal_tables(): suspension flag +
-    * error details (set by ALTER ... SUSPEND WAL [WITH tag, msg]) and a
-    * commit counter bumped on INSERT (writerTxn/sequencerTxn
-    * approximation — Spark has no sequencer; the counters advance in
-    * lockstep). */
-  final case class WalState(suspended: Boolean, errorTag: String, errorMessage: String)
-  private[graft] val walState =
-    new java.util.concurrent.ConcurrentHashMap[String, WalState]()
-  private[graft] val walTxnCounter =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[graft] def suspendWal(name: String, tag: String, msg: String): Unit =
-    walState.put(name.toLowerCase, WalState(true, tag, msg))
-  private[graft] def resumeWal(name: String): Unit =
-    walState.put(name.toLowerCase, WalState(false, null, null))
-  /** Per-table txn log for wal_transactions(): (seq, wall-clock,
-    * batch min ts, batch max ts, row count). */
-  final case class WalTxnRec(seq: Long, wall: java.sql.Timestamp,
-                             minTs: java.sql.Timestamp, maxTs: java.sql.Timestamp,
-                             rows: Long)
-  private[graft] val walTxnLog =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.List[WalTxnRec]]()
-
-  private[graft] def bumpWalTxn(name: String): Unit = bumpWalTxn(name, null, null, 0L)
-
-  private[graft] def bumpWalTxn(name: String, minTs: java.sql.Timestamp,
-                                maxTs: java.sql.Timestamp, rows: Long): Unit = {
-    val seq = walTxnCounter.merge(name.toLowerCase, 1L, (a, b) => a + b)
-    walTxnLog
-      .computeIfAbsent(name.toLowerCase,
-        _ => java.util.Collections.synchronizedList(new java.util.ArrayList[WalTxnRec]()))
-      .add(WalTxnRec(seq, new java.sql.Timestamp(System.currentTimeMillis()),
-        minTs, maxTs, rows))
-  }
+  /** Commit counter bumped on INSERT, with one txn log record per
+    * commit (writerTxn/sequencerTxn approximation — Spark has no
+    * sequencer; the counters advance in lockstep). */
+  private[graft] def bumpWalTxn(spark: SparkSession, name: String, minTs: java.sql.Timestamp,
+                                maxTs: java.sql.Timestamp, rows: Long): Unit =
+    SessionCatalog(spark).update(name) { m =>
+      val seq = m.txnCount + 1
+      m.copy(txnCount = seq, txnLog = m.txnLog :+ TableMeta.WalTxnRec(seq,
+        new java.sql.Timestamp(System.currentTimeMillis()), minTs, maxTs, rows))
+    }
 
   /** wal_tables() — the reference's 8-column shape
     * (WalTableListFunctionFactory.java:335-349): every WAL-enabled
@@ -754,17 +530,18 @@ object Catalog {
     * counters. */
   def walTables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val declared = createMeta.asScala.toSeq.collect {
-      case (n, m) if m.walEnabled => n }
+    val cat = SessionCatalog(spark)
+    val all = cat.snapshot
+    val declared = all.collect { case (n, m) if m.created && m.walEnabled => n }
     // registered engine tables count as WAL tables (the reference's
     // default is WAL-enabled)
-    val ingest = Tables.names.filter(n => Tables.registeredPath(n).isDefined)
-    val views = (matViewReg.keySet.asScala ++ liveViewReg.keySet.asScala).toSeq
+    val ingest = Tables.names.filter(n => cat.pathOf(n).isDefined)
+    val views = all.collect {
+      case (n, m) if m.matView.isDefined || m.liveView.isDefined => n }
     (declared ++ ingest ++ views).distinct.sorted.map { n =>
-      val st = Option(walState.get(n.toLowerCase))
-      val txn = Option(walTxnCounter.get(n.toLowerCase)).map(_.longValue).getOrElse(0L)
-      (n, st.exists(_.suspended), txn, 0L, txn,
-        st.map(_.errorTag).orNull, st.map(_.errorMessage).orNull, 0)
+      val m = cat.get(n).getOrElse(TableMeta())
+      (n, m.wal.suspended, m.txnCount, 0L, m.txnCount,
+        m.wal.errorTag, m.wal.errorMessage, 0)
     }.toDF("name", "suspended", "writerTxn", "bufferedTxnSize",
       "sequencerTxn", "errorTag", "errorMessage", "memoryPressure")
   }
@@ -774,8 +551,9 @@ object Catalog {
     */
   def tableStorage(spark: SparkSession): DataFrame = {
     import spark.implicits._
+    val cat = SessionCatalog(spark)
     Tables.names.flatMap { n =>
-      Tables.registeredPath(n).map { p =>
+      cat.pathOf(n).map { p =>
         val f = new java.io.File(p)
         val (files, bytes) =
           if (f.isDirectory) {
@@ -805,7 +583,7 @@ object Catalog {
     import spark.implicits._
     val tid = Thread.currentThread().getId
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    Tables.names.filter(n => Tables.registeredPath(n).isDefined)
+    Tables.names.filter(n => SessionCatalog(spark).pathOf(n).isDefined)
       .map(n => (n, tid, now, 0L))
       .toDF("table_name", "owner_thread_id", "last_access_timestamp", "current_txn")
   }
@@ -817,7 +595,7 @@ object Catalog {
     import spark.implicits._
     val tid = Thread.currentThread().getId
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    Tables.names.filter(n => Tables.registeredPath(n).isDefined)
+    Tables.names.filter(n => SessionCatalog(spark).pathOf(n).isDefined)
       .map(n => (n, tid, now, "none"))
       .toDF("table_name", "owner_thread_id", "last_access_timestamp", "ownership_reason")
   }
@@ -1003,20 +781,16 @@ object Catalog {
     columnsOf(spark, table)
 
   /** SHOW CREATE TABLE t — one `ddl` row
-    * (reference `ShowCreateTableRecordCursorFactory`).
+    * (reference `ShowCreateTableRecordCursorFactory`); the storage tail
+    * replays the original CREATE's partition/TTL/WAL spelling.
     */
-  /** Storage tail (partition/TTL/WAL spelling) remembered from the
-    * original CREATE so SHOW CREATE TABLE replays it verbatim. */
-  private[graft] val createTails =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def registerCreateTail(name: String, tail: String): Unit =
-    createTails.put(name.toLowerCase, tail)
-
   def showCreateTable(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val name = table.split('.').last.toLowerCase
-    val decls = Option(declaredCols.get(name)).getOrElse(Map.empty)
+    val name = SessionCatalog.key(table)
+    val cat = SessionCatalog(spark)
+    val meta = cat.get(name)
+    val designated = cat.designatedTs(name)
+    val decls = meta.map(_.columns).getOrElse(Map.empty)
     val cols = spark.table(table).schema.fields
       .map { f =>
         val d = decls.get(f.name.toLowerCase)
@@ -1039,7 +813,7 @@ object Catalog {
                 val actual = spark.table(table).schema.fields.map(_.name)
                 def resolve(c: String) =
                   actual.find(_.equalsIgnoreCase(c.trim)).getOrElse(c.trim)
-                val ts = graft.sql.QuestSql.designatedTsOf(name)
+                val ts = designated
                 var items = m.group(1).split(",").map(c => resolve(c)).toSeq
                 ts.filterNot(t => items.exists(_.equalsIgnoreCase(t)))
                   .foreach(t => items = items :+ t)
@@ -1052,9 +826,8 @@ object Catalog {
         }
         s"\t${f.name} $tpe$parq"
       }.mkString(",\n")
-    val tsClause = graft.sql.QuestSql.designatedTsOf(name)
-      .map(c => s" timestamp($c)").getOrElse("")
-    val tail = Option(createTails.get(name)).getOrElse(
+    val tsClause = designated.map(c => s" timestamp($c)").getOrElse("")
+    val tail = meta.flatMap(_.createTail).getOrElse(
       if (tsClause.nonEmpty) " PARTITION BY DAY BYPASS WAL" else "")
     Seq(s"CREATE TABLE '$name' ( \n$cols\n)$tsClause$tail;").toDF("ddl")
   }
@@ -1135,11 +908,11 @@ object Catalog {
               uts: Seq[(String, Boolean)] = null): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    def kindOf(n: String): String = {
-      val k = n.toLowerCase
-      if (matViewReg.containsKey(k) || matViewMeta.containsKey(k)) "m"
-      else if (plainViewReg.containsKey(k) || liveViewReg.containsKey(k)) "v"
-      else "r"
+    val cat = SessionCatalog(spark)
+    def kindOf(n: String): String = cat.get(n).flatMap(_.view) match {
+      case Some(_: TableMeta.MatView) => "m"
+      case Some(_) => "v"
+      case None => "r"
     }
     def row(oid: Int, name: String, ns: Int, kind: String,
             pers: String, pop: Boolean): Row =
@@ -1148,7 +921,7 @@ object Catalog {
         pop, "d", false, 0, 0, 0, null, null, null, false, 0L)
     val rows = row(1259, "pg_class", 11, "r", "u", pop = false) +:
       Option(uts).getOrElse(userTables(spark)).map { case (n, _) =>
-        row(tableIdOf(n), n, 2200, kindOf(n), "p", pop = true) }
+        row(cat.idOf(n), n, 2200, kindOf(n), "p", pop = true) }
     val schema = StructType(Seq(
       StructField("oid", IntegerType), StructField("relname", StringType),
       StructField("relnamespace", IntegerType), StructField("reltype", IntegerType),
@@ -1183,8 +956,9 @@ object Catalog {
     // monotonic table id that joins pg_class)
     val typLen = Map(16 -> 1, 18 -> 1, 21 -> 2, 23 -> 4, 700 -> 4,
       20 -> 8, 701 -> 8, 1114 -> 8, 1184 -> 8, 2950 -> 16)
+    val cat = SessionCatalog(spark)
     Option(uts).getOrElse(userTables(spark)).flatMap { case (n, _) =>
-      val decls = Option(declaredCols.get(n.toLowerCase)).getOrElse(Map.empty)
+      val decls = cat.get(n).map(_.columns).getOrElse(Map.empty)
       spark.table(n).schema.fields.zipWithIndex.map { case (f, i) =>
         // a declared CHAR(n) carries bpchar oid 1042 with PG's n+4
         // typmod (PgAttributeFunctionFactoryTest:230 bare char -> 1042/5)
@@ -1196,7 +970,7 @@ object Catalog {
           }
         val oid = charM.map(_ => 1042)
           .getOrElse(pgTypeOids.getOrElse(sqlTypeName(f.dataType), 25))
-        (tableIdOf(n), f.name, (i + 1).toShort, oid,
+        (cat.idOf(n), f.name, (i + 1).toShort, oid,
           false, charM.map(_ + 4).getOrElse(-1), typLen.getOrElse(oid, -1).toShort,
           "", false, true)
       }
@@ -1232,7 +1006,8 @@ object Catalog {
     // surfaces the synthetic operator entries (!=, <>, case, ||) from
     // FunctionRegistry.builtinOperators; append them from the same
     // source so the row set stays identical.
-    val names = (spark.sessionState.catalog.listFunctions("default", "*")
+    val names = (spark.sessionState.catalog
+        .listFunctions(spark.catalog.currentDatabase, "*")
         .map(_._1.funcName) ++
       org.apache.spark.sql.catalyst.analysis.FunctionRegistry
         .builtinOperators.keys)
@@ -1344,12 +1119,10 @@ object Catalog {
     // session tables with no ingest dir: serve the in-memory txn log
     // (one entry per INSERT commit)
     val rows =
-      if (dirRows.nonEmpty) dirRows.toSeq
-      else Option(walTxnLog.get(tableDir.toLowerCase)).map { log =>
-        log.asScala.toSeq.map(r =>
-          Row(r.seq, r.wall, 1, 0, r.seq.toInt, 0L, r.minTs, r.maxTs,
-            if (r.rows > 0) r.rows else null, 0.toShort))
-      }.getOrElse(Seq.empty)
+      if (dirRows.nonEmpty || tableDir.contains('/')) dirRows.toSeq
+      else SessionCatalog(spark).get(tableDir).toSeq.flatMap(_.txnLog).map(r =>
+        Row(r.seq, r.wall, 1, 0, r.seq.toInt, 0L, r.minTs, r.maxTs,
+          if (r.rows > 0) r.rows else null, 0.toShort))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
@@ -1390,32 +1163,32 @@ object Catalog {
   // information_schema/pg_catalog reuse the built views (the rebuild
   // costs ~0.5 s: catalog listing + one DDL parse per view).
 
-  private val metaBuilt = new java.util.concurrent.ConcurrentHashMap[String, (Boolean, Boolean)]()
-
-  private def sessionKey(spark: SparkSession): String = Tables.sessionKey(spark)
-
   /** Drop the cached meta-view state for a session (next query that
     * touches information_schema / pg_catalog rebuilds the snapshot).
     */
   def invalidateMetaViews(spark: SparkSession): Unit =
-    metaBuilt.remove(sessionKey(spark))
+    SessionCatalog(spark).snapshotViewsBuilt = (false, false)
 
-  /** Sessions whose CONSTANT pg_catalog views are registered. 12 of the
-    * 15 pg views are static by construction (literal rows or
-    * empty-with-schema — pg_type, pg_roles, …): no DDL can change them,
-    * so they are built once per session and survive
-    * [[invalidateMetaViews]]. Only the catalog snapshots (pg_class,
-    * pg_attribute, pg_proc, information_schema.*) rebuild after DDL —
-    * a DDL-heavy workload otherwise re-collects and re-registers all 15
-    * views on every later pg_catalog query (~1 s each time).
+  /** The CONSTANT pg_catalog views. 12 of the 15 pg views are static by
+    * construction (literal rows or empty-with-schema — pg_type,
+    * pg_roles, …): no DDL can change them, so they are built once and
+    * survive [[invalidateMetaViews]]. Only the catalog
+    * snapshots (pg_class, pg_attribute, pg_proc, information_schema.*)
+    * rebuild after DDL — a DDL-heavy workload otherwise re-collects and
+    * re-registers all 15 views on every later pg_catalog query (~1 s
+    * each time).
     */
-  private val metaStaticBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val staticPgViews: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "pg_namespace" -> pgNamespace, "pg_database" -> pgDatabase,
+    "pg_type" -> pgType, "pg_extension" -> pgExtension,
+    "pg_attrdef" -> pgAttrDef, "pg_description" -> pgDescription,
+    "pg_enum" -> pgEnum, "pg_index" -> pgIndex, "pg_inherits" -> pgInherits,
+    "pg_locks" -> pgLocks, "pg_range" -> pgRange, "pg_roles" -> pgRoles)
 
   def ensureMetaViews(spark: SparkSession,
                       info: Boolean = true, pg: Boolean = true): Unit = {
-    val (haveInfo, havePg) =
-      metaBuilt.getOrDefault(sessionKey(spark), (false, false))
+    val cat = SessionCatalog(spark)
+    val (haveInfo, havePg) = cat.snapshotViewsBuilt
     def reg(db: String, name: String, df: DataFrame): Unit = {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       spark.sql(s"CREATE OR REPLACE VIEW $db.$name AS ${literalSelect(df)}")
@@ -1432,26 +1205,13 @@ object Catalog {
       reg("pg_catalog", "pg_class", pgClass(spark, uts))
       reg("pg_catalog", "pg_attribute", pgAttribute(spark, uts))
       reg("pg_catalog", "pg_proc", pgProc(spark))
-      // The latch alone has no recovery path if a static view is later
-      // dropped (client DROP VIEW, catalog reset) — verify one sentinel
-      // view cheaply (in-memory catalog lookup) before trusting it.
-      if (metaStaticBuilt.add(sessionKey(spark)) ||
-          !spark.catalog.tableExists("pg_catalog.pg_type")) {
-        // constants — once per session, immune to DDL
-        reg("pg_catalog", "pg_namespace", pgNamespace(spark))
-        reg("pg_catalog", "pg_database", pgDatabase(spark))
-        reg("pg_catalog", "pg_type", pgType(spark))
-        reg("pg_catalog", "pg_extension", pgExtension(spark))
-        reg("pg_catalog", "pg_attrdef", pgAttrDef(spark))
-        reg("pg_catalog", "pg_description", pgDescription(spark))
-        reg("pg_catalog", "pg_enum", pgEnum(spark))
-        reg("pg_catalog", "pg_index", pgIndex(spark))
-        reg("pg_catalog", "pg_inherits", pgInherits(spark))
-        reg("pg_catalog", "pg_locks", pgLocks(spark))
-        reg("pg_catalog", "pg_range", pgRange(spark))
-        reg("pg_catalog", "pg_roles", pgRoles(spark))
-      }
     }
-    metaBuilt.put(sessionKey(spark), (haveInfo || info, havePg || pg))
+    // constants, immune to DDL: built when missing (first use, or a
+    // client DROP VIEW / catalog reset since), checked by in-memory
+    // catalog lookups
+    if (pg) staticPgViews.foreach { case (name, build) =>
+      if (!spark.catalog.tableExists(s"pg_catalog.$name")) reg("pg_catalog", name, build(spark))
+    }
+    cat.snapshotViewsBuilt = (haveInfo || info, havePg || pg)
   }
 }

@@ -15,14 +15,15 @@ object DbgProf {
       (1 to n).foreach(_ => f)
       println(f"${(System.nanoTime() - t0) / 1e6 / n}%.2f ms  $label")
     }
+    val cat = graft.SessionCatalog(spark)
     qs.foreach { q =>
       time(s"full sql(): $q", 30)(graft.sql.QuestSql.sql(spark, q).queryExecution.analyzed)
-      time("DialectRewrites", 100)(graft.sql.DialectRewrites(q))
-      val q1 = graft.sql.DialectRewrites(q)
+      time("DialectRewrites", 100)(graft.sql.DialectRewrites(q, cat))
+      val q1 = graft.sql.DialectRewrites(q, cat)
       time("AutoAlias", 100)(graft.sql.AutoAlias.rewriteQuery(q1))
       val q2 = graft.sql.AutoAlias.rewriteQuery(q1)
-      time("QuestSql.rewrite", 100)(graft.sql.QuestSql.rewrite(q2))
-      time("rewriteFnMacros", 100)(graft.sql.QuestSql.rewriteFnMacros(q2))
+      time("QuestSql.rewrite", 100)(graft.sql.QuestSql.rewrite(q2, cat))
+      time("rewriteFnMacros", 100)(graft.sql.QuestSql.rewriteFnMacros(cat, q2))
       time("spark.sql analyze only", 30)(
         spark.sql("SELECT event_type, window(ts, '1 day'), count(*) FROM events GROUP BY event_type, window(ts, '1 day')").queryExecution.analyzed)
       val Rel = """([\w.]+|\((?:[^()]|\([^()]*\))*\))"""

@@ -35,21 +35,15 @@ class Engine(val spark: SparkSession, dataDir: String) {
 object Engine {
   def apply(spark: SparkSession, dataDir: String): Engine = new Engine(spark, dataDir)
 
-  /** Sessions whose function registry is already populated — guards
-    * [[ensureFunctions]] so the per-statement SQL path pays the ~20
-    * UDF/UDAF registrations once, not per query.
-    */
-  private val fnRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Idempotent, once-per-session [[registerFunctions]]. Every
-    * QuestSql statement goes through this, so a dialect query can never
-    * fail on registration order (a query referencing e.g.
-    * `weighted_stddev` must not depend on some earlier query having
-    * registered the library).
+  /** Idempotent, once-per-session [[registerFunctions]]: the
+    * per-statement SQL path pays the ~20 UDF/UDAF registrations once,
+    * not per query. Every QuestSql statement goes through this, so a
+    * dialect query can never fail on registration order (a query
+    * referencing e.g. `weighted_stddev` must not depend on some earlier
+    * query having registered the library).
     */
   def ensureFunctions(spark: SparkSession): Unit =
-    if (fnRegistered.add(Integer.toHexString(System.identityHashCode(spark))))
+    if (SessionCatalog(spark).functionsRegistered.compareAndSet(false, true))
       registerFunctions(spark)
 
   /** Expose the custom function library to SQL (reference

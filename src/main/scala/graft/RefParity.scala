@@ -374,8 +374,7 @@ object RefParity {
     // full dialect-state reset: leftover live/mat view defs re-materialize
     // on later statements that merely mention the name — compounding work
     // and memory across 1000+ cases (the round-7 sweep OOMed from this)
-    graft.sql.QuestSql.resetSessionState()
-    graft.sql.QuestSql.retainDesignatedTs(baseline)
+    graft.SessionCatalog(spark).clear()
     try graft.ops.Checkpoint.release() catch { case _: Throwable => () }
     sinceCacheClear += 1
     if (sinceCacheClear >= 100) {

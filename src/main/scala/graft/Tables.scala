@@ -22,7 +22,7 @@ object Tables {
     "orders" -> "o_orderdate",
     "lineitem" -> "l_shipdate")
 
-  /** Memo of constructed scan DataFrames per (session, dir, table).
+  /** Scan DataFrame of a fixture table, memoized per session and dir.
     * `spark.read.parquet` pays file listing + footer schema inference on
     * every call (~50-100 ms); a workload touching the same base tables
     * hundreds of times repays nothing for repeating it. The cached value
@@ -31,11 +31,8 @@ object Tables {
     * reused, exactly like a registered temp view). Cleared whenever DDL
     * invalidates the session's registration.
     */
-  private val loadMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadMemo.computeIfAbsent((sessionKey(spark), dir, name),
+    SessionCatalog(spark).fixtureScans.computeIfAbsent((dir, name),
       _ => load0(spark, dir, name))
 
   /** Normalize timestamp columns so every operator downstream sees plain
@@ -124,39 +121,18 @@ object Tables {
   def loadSpread(spark: SparkSession, dir: String, name: String): DataFrame =
     spread(spark, load(spark, dir, name))
 
-  private val dirRegistry = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Source path of a registered table (for SHOW PARTITIONS). */
-  def registeredPath(name: String): Option[String] =
-    Option(dirRegistry.get(name.toLowerCase))
-
-  /** Snapshot of every registered table → source path (checkpoint walk). */
-  def registeredTables: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    dirRegistry.asScala.toMap
-  }
-
-  /** Point a table name at a new source path (checkpoint restore). */
-  def registerPath(name: String, path: String): Unit =
-    dirRegistry.put(name.toLowerCase, path)
-
-  private val registeredDir = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Cache key for per-session state (temp views are session-scoped). */
-  private[graft] def sessionKey(spark: SparkSession): String =
-    Integer.toHexString(System.identityHashCode(spark))
-
   /** Forget a session's registration so the next [[registerAll]] rebuilds
     * the temp views (called when DDL/DML may have replaced one of them).
     */
   private[graft] def forgetRegistration(spark: SparkSession): Unit = {
-    val key = sessionKey(spark)
-    val dir = Option(registeredDir.remove(key))
-    // Drop the mutating session's entries AND any other session's memo
-    // over the same dir: a mutation (ops.Mutations.swap) replaces files
-    // under the dir, so a sibling session's memoized DataFrame would
-    // keep a stale file index that load() used to rebuild per call.
-    loadMemo.keySet.removeIf(k => k._1 == key || dir.contains(k._2))
+    val cat = SessionCatalog(spark)
+    val dir = Option(cat.viewsDir)
+    cat.viewsDir = null
+    cat.fixtureScans.clear()
+    // a mutation (ops.Mutations.swap) replaces files under the dir, so a
+    // sibling session's memoized DataFrame over the same dir would keep
+    // a stale file index that load() used to rebuild per call
+    dir.foreach(d => SessionCatalog.all.foreach(_.fixtureScans.keySet.removeIf(_._1 == d)))
   }
 
   /** Register every test table as a temp view. Parquet footer reads and
@@ -165,11 +141,8 @@ object Tables {
     * re-registers and invalidates the cached catalog meta-views.
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
-    if (registeredDir.put(sessionKey(spark), dir) != dir) {
-      names.foreach { n =>
-        load0(spark, dir, n).createOrReplaceTempView(n)
-        dirRegistry.put(n, s"$dir/$n.parquet")
-      }
+    if (SessionCatalog(spark).claimRegistration(dir)) {
+      names.foreach(n => load0(spark, dir, n).createOrReplaceTempView(n))
       Catalog.invalidateMetaViews(spark)
     }
 }

@@ -68,7 +68,7 @@ object Checkpoint {
     val dir = s"${root(spark)}/ckpt_$startedAt"
     val manifest = new StringBuilder("{\"tables\":[")
     var first = true
-    graft.Tables.registeredTables.toSeq.sortBy(_._1).foreach { case (name, srcPath) =>
+    graft.SessionCatalog(spark).paths.toSeq.sortBy(_._1).foreach { case (name, srcPath) =>
       val src = Paths.get(srcPath)
       val files = walkFiles(src)
       if (files.nonEmpty) {
@@ -151,7 +151,7 @@ object Checkpoint {
     tables.foreach { name =>
       val df = spark.read.parquet(s"$checkpointDir/$name")
       df.createOrReplaceTempView(name)
-      graft.Tables.registerPath(name, s"$checkpointDir/$name")
+      graft.SessionCatalog(spark).update(name)(_.copy(path = Some(s"$checkpointDir/$name")))
     }
     graft.Catalog.invalidateMetaViews(spark)
     tables

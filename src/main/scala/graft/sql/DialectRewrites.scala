@@ -19,7 +19,7 @@ package graft.sql
   */
 object DialectRewrites {
 
-  def apply(q0: String): String = {
+  def apply(q0: String, cat: graft.SessionCatalog): String = {
     var q = stripComments(q0)
     // the reference tokenizer doesn't need a space after a quoted
     // literal (`FROM 'trades'SAMPLE BY`, `'UTC'with offset`) — insert
@@ -118,7 +118,7 @@ object DialectRewrites {
     q = q.replaceAll(
       "(?i)(?<![:\\w])((?:[\\w.]+)?\\((?:[^()']|'[^']*'|\\([^()']*\\))*\\)|[\\w.]+|'[^']*')\\s*::\\s*ipv4\\b",
       "__ipv4_cast($1)")
-    q = ipv4Ops(q)
+    q = ipv4Ops(q, cat)
     // binary regex-match operators over string literals (`s ~ 'pat'`,
     // LiveViewTest regex filters); unary ipv4 ~ takes ident operands so
     // the quoted-pattern requirement keeps them disjoint
@@ -256,7 +256,7 @@ object DialectRewrites {
     q = windowSpecAliases(q)
     q = emptyFrames(q)
     q = lagLeadFrames(q)
-    q = timeRangeFrames(q)
+    q = timeRangeFrames(q, cat)
     q = unnestAll(q)
     q = unnestColumns(q)
     q = unnestPg(q)
@@ -272,7 +272,7 @@ object DialectRewrites {
     // AFTER pivotGroupBy: a PIVOT's `FOR c IN (1, NULL)` value list is
     // consumed by the pivot lowering — the null-compat predicate rewrite
     // here must only see real IN predicates
-    if (fw0 != "update" && fw0 != "insert") q = inListNulls(q)
+    if (fw0 != "update" && fw0 != "insert") q = inListNulls(q, cat)
     // `uuid '…'` typed-literal spelling (PG-style) → marker call: the
     // value is its string form, typeOf answers 'UUID' (UuidTest). A
     // plain CAST AS uuid can't carry that — the uuid target was already
@@ -937,7 +937,7 @@ object DialectRewrites {
     *   - `ip <<= 'net/cidr'` containment-or-equal, `<<` strict (and the
     *     mirrored `>>=` / `>>`)
     */
-  private def ipv4Ops(q0: String): String = {
+  private def ipv4Ops(q0: String, cat: graft.SessionCatalog): String = {
     val textualGate =
       """(?i)\bipv4\s+'|<<=?|>>=?|'(?:\d+\.){3}\d+(?:/\d+)?'\s*[&|^+\-]|[&|^]\s*'(?:\d+\.){3}\d+|\bin\s+'(?:\d+\.){3}\d+""".r
         .findFirstIn(q0).isDefined
@@ -946,7 +946,7 @@ object DialectRewrites {
     lazy val declGate = """[&|^~]""".r.findFirstIn(q0).isDefined && {
       val low = q0.toLowerCase
       """[A-Za-z_]\w*""".r.findAllIn(low).exists(w =>
-        graft.Catalog.declaredTypesOf(w).exists(_.startsWith("IPV4")))
+        cat.declaredTypesOf(w).exists(_.startsWith("IPV4")))
     }
     if (!textualGate && !declGate &&
         !"""(?i)__ipv4_cast\(|\bas\s+ipv4\s*\)""".r.findFirstIn(q0).isDefined) return q0
@@ -1013,7 +1013,7 @@ object DialectRewrites {
         // a bare identifier declared IPV4 in some in-session table is an
         // ip operand (string carrier — plain & would fail to type)
         def declIp(x: String) = x.matches("[\\w.]+") && !intLit(x) &&
-          graft.Catalog.declaredTypesOf(x.split('.').last.toLowerCase)
+          cat.declaredTypesOf(x.split('.').last.toLowerCase)
             .exists(_.startsWith("IPV4"))
         def ipish(x: String) = x.toUpperCase.startsWith("IPV4LIT(") || dotted(x) ||
           declIp(x) || x.toUpperCase.startsWith("__IPV4_CAST(") ||
@@ -1084,7 +1084,7 @@ object DialectRewrites {
           kw(prevWord)
         val isNetmask = opnd.toLowerCase.startsWith("netmask(")
         val isIpCol = opnd.matches("[\\w.]+") && !opnd.matches("-?\\d+") &&
-          graft.Catalog.declaredTypesOf(opnd.split('.').last.toLowerCase)
+          cat.declaredTypesOf(opnd.split('.').last.toLowerCase)
             .exists(_.startsWith("IPV4"))
         sb.append(s.substring(last, um.start()))
         if (unary && (isNetmask || isIpCol))
@@ -1737,7 +1737,7 @@ object DialectRewrites {
     * (plain µs integer). DESC order is handled by negating the key fed
     * to the aggregate.
     */
-  def slidingValueFrames(q0: String): String = {
+  def slidingValueFrames(q0: String, cat: graft.SessionCatalog): String = {
     if (!"""(?i)\brange\s+(?:between\s+\d+\s+preceding\s+and\s+current\s+row|\d+\s+preceding)"""
         .r.findFirstIn(q0).isDefined) return q0
     // tokens: paren nesting with quoted strings. Depth 6: a
@@ -1774,7 +1774,7 @@ object DialectRewrites {
         case other => // min | max: string-carrier decimals (p > 38)
           // need numeric order, not the carrier's lexicographic one
           val wideDec = arg.trim.matches("[\\w.]+") &&
-            graft.Catalog.declaredTypesOf(arg.trim.split('.').last.toLowerCase)
+            cat.declaredTypesOf(arg.trim.split('.').last.toLowerCase)
               .exists(t => """(?i)^DECIMAL\s*\(\s*(\d+)""".r
                 .findFirstMatchIn(t).exists(_.group(1).toInt > 38))
           if (wideDec) other + "_dec" else other
@@ -1829,7 +1829,7 @@ object DialectRewrites {
     * `ORDER BY ts RANGE BETWEEN 180 second PRECEDING AND CURRENT ROW`):
     * Spark needs a numeric order key, so the bound becomes microseconds
     * and the frame's ORDER BY key is wrapped in unix_micros(). */
-  private def timeRangeFrames(q0: String): String = {
+  private def timeRangeFrames(q0: String, cat: graft.SessionCatalog): String = {
     val unitUs = Map("microsecond" -> 1L, "millisecond" -> 1000L,
       "second" -> 1000000L, "minute" -> 60000000L, "hour" -> 3600000000L,
       "day" -> 86400000000L)
@@ -1871,7 +1871,7 @@ object DialectRewrites {
     while (fm.find(cursor)) {
       val key = fm.group(2).trim
       val isNs = key.matches("[\\w.]+") &&
-        graft.Catalog.declaredTypesOf(key.split('.').last.toLowerCase)
+        cat.declaredTypesOf(key.split('.').last.toLowerCase)
           .exists(_.toUpperCase.startsWith("TIMESTAMP_NS"))
       val keyExpr =
         if (isNs)
@@ -2083,7 +2083,7 @@ object DialectRewrites {
     * (value-based equality); Spark's three-valued IN never does. A NOT
     * IN over such a list keeps non-null non-members. `x IN null[::t]`
     * is a bare null-membership test. */
-  private[sql] def inListNulls(q0: String): String = {
+  private[sql] def inListNulls(q0: String, cat: graft.SessionCatalog): String = {
     var s = q0.replaceAll("(?i)([\\w.]+)\\s+IN\\s+null(\\s*::\\s*\\w+)?\\b", "$1 IS NULL")
     // `a in '3'` over a STRING-typed column is single-member list
     // containment in the reference (InVarcharFunctionFactory) — never
@@ -2092,7 +2092,7 @@ object DialectRewrites {
       .compile("(?i)\\b([\\w.]+)\\s+(NOT\\s+)?IN\\s+('(?:[^']|'')*'(?:\\s*::\\s*(?:char|string|varchar))?)(?!\\s*[,:(])")
       .matcher(s).replaceAll { mr =>
         val colName = mr.group(1).split('.').last.toLowerCase
-        val decls = graft.Catalog.declaredTypesOf(colName)
+        val decls = cat.declaredTypesOf(colName)
         val stringDecl = decls.nonEmpty && decls.forall(t => t.startsWith("STRING") ||
           t.startsWith("VARCHAR") || t.startsWith("SYMBOL") || t.startsWith("CHAR"))
         // undeclared (CTAS) columns: the literal's SHAPE decides — a
@@ -2141,7 +2141,7 @@ object DialectRewrites {
         val opStart0 = operandStart(s, m.start())
         val op = s.substring(opStart0, m.start()).trim
         op.matches("[\\w.]+") &&
-          graft.Catalog.declaredTypesOf(op.split('.').last.toLowerCase).contains("CHAR")
+          cat.declaredTypesOf(op.split('.').last.toLowerCase).contains("CHAR")
       }
       def nullish(a: String) = isNullLit(a) ||
         (a.trim.matches("''(\\s*::\\s*\\w+)?") && charLhs)

@@ -1,5 +1,6 @@
 package graft.sql
 
+import graft.{SessionCatalog, TableMeta}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.matching.Regex
@@ -28,8 +29,8 @@ import scala.util.matching.Regex
   *
   * The time-series join forms accept a table name or a parenthesized
   * subquery (itself dialect-rewritten) on either side, resolve each
-  * side's designated timestamp from [[graft.Tables.designatedTs]] /
-  * [[registerDesignatedTs]] (falling back to `ts`, then to the first
+  * side's designated timestamp from its [[graft.TableMeta]] record or
+  * [[graft.Tables.designatedTs]] (falling back to `ts`, then to the first
   * timestamp-typed column), and allow post-join WHERE / ORDER BY /
   * LIMIT. Everything else passes through to Spark SQL untouched (which
   * already covers the reference's ANSI surface: joins, aggs, windows,
@@ -37,60 +38,11 @@ import scala.util.matching.Regex
   */
 object QuestSql {
 
-  // ---- designated timestamps ----------------------------------------------
-
-  private val tsRegistry = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** CTAS tables WITHOUT a designated timestamp whose select list still
-    * yields a recognizable time column (timestamp_sequence alias) — the
-    * deprecated LATEST BY grammar orders by it (IPv4Test latest by). */
-  private val fallbackTsRegistry = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  graft.Tables.designatedTs.foreach { case (t, c) => tsRegistry.put(t, c) }
-
-  /** Register a table's designated timestamp (QuestDB `timestamp(c)`). */
-  def registerDesignatedTs(table: String, tsColumn: String): Unit =
-    tsRegistry.put(table.split('.').last.toLowerCase, tsColumn)
-
-  /** The registered designated timestamp, if any. */
-  def designatedTsOf(table: String): Option[String] =
-    Option(tsRegistry.get(table.split('.').last.toLowerCase))
-
-  /** Drop designated-ts registrations except `keep` (session-reset for
-    * harnesses that tear tables down between cases). */
-  def retainDesignatedTs(keep: Set[String]): Unit = {
-    val it = tsRegistry.keySet.iterator()
-    while (it.hasNext) if (!keep(it.next())) it.remove()
-  }
-
-  /** Full dialect session-state reset for harnesses that tear tables
-    * down between cases (RefParity): forgets every live/mat view
-    * definition and per-table catalog registration, keeping only the
-    * static parquet tables' designated-ts entries. Without this, a
-    * leftover live view whose name appears in a later statement gets
-    * re-materialized on every query (refreshLiveViews scans by name) —
-    * state contaminates and compounds across cases. */
-  def resetSessionState(): Unit = {
-    liveViewDefs.clear(); matViewDefs.clear(); matViewDirty.clear()
-    pinnedViewDefs.clear()
-    dottedTables.clear()
-    graft.Catalog.clearTableRegistries()
-    retainDesignatedTs(graft.Tables.designatedTs.keySet)
-  }
-
-  /** DROP TABLE: remove the view and every catalog registration, so a
-    * re-created namesake starts clean. The static parquet test tables
-    * keep their designated-ts entry (re-registration via registerAll
-    * does not re-derive it). */
-  private def dropAndUnregister(spark: SparkSession, name: String): Unit = {
-    spark.catalog.dropTempView(name)
-    graft.Catalog.unregisterTable(name)
-    // a dropped dotted name stops mangling later statements' text
-    if (name.contains("__dot__"))
-      dottedTables.remove(name.toLowerCase.replace("__dot__", "."))
-    val key = name.split('.').last.toLowerCase
-    if (!graft.Tables.designatedTs.contains(key)) tsRegistry.remove(key)
-    fallbackTsRegistry.remove(key)
-  }
-
+  // ---- per-table state ------------------------------------------------------
+  // Designated timestamps, declared columns, view definitions and the
+  // rest of a table's facts live in one graft.TableMeta record per table
+  // in the session's graft.SessionCatalog. Text rewrites that run before
+  // the statement reaches Spark receive that catalog as a parameter.
   /** `expr alias` (implicit, call-result only) → `expr AS alias` so op
     * forms see one alias spelling. */
   private def normalizeAliasSpelling(item: String): String = {
@@ -118,9 +70,8 @@ object QuestSql {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def tsOfRel(refName: String, df: DataFrame): String = {
-    val registered =
-      if (refName.nonEmpty) Option(tsRegistry.get(refName.split('.').last.toLowerCase))
-      else None
+    val cat = SessionCatalog(df.sparkSession)
+    val registered = if (refName.nonEmpty) cat.designatedTs(refName) else None
     registered.getOrElse {
       if (df.columns.contains("ts")) "ts"
       else df.schema.fields
@@ -131,8 +82,7 @@ object QuestSql {
           // name is some table's registered designated timestamp —
           // `(x latest on k …) sample by` materializes to a view whose
           // ts column kept the base table's name
-          import scala.jdk.CollectionConverters._
-          val known = tsRegistry.values().asScala.toSet
+          val known = cat.designatedTsNames
           df.schema.fields.find(f =>
             f.dataType == org.apache.spark.sql.types.LongType &&
               known.contains(f.name)).map(_.name)
@@ -149,7 +99,7 @@ object QuestSql {
               // carrier (`cast(... as timestamp_ns) AS date` — the view
               // registration declared it TIMESTAMP_NS;
               // SampleByNanoTimestampTest:3090)
-              Option(graft.Catalog.declaredCols.get(refName.split('.').last.toLowerCase))
+              cat.get(refName).map(_.columns)
                 .flatMap(_.collectFirst {
                   case (n, d) if d.tpe.toUpperCase.startsWith("TIMESTAMP_NS") &&
                       df.columns.exists(_.equalsIgnoreCase(n)) =>
@@ -429,24 +379,21 @@ object QuestSql {
     * referenced view's temp view from its registered definition; while
     * a checkpoint is active, pinned definitions win (post-checkpoint
     * ALTER/DROP VIEW must not affect reads until RELEASE). */
-  private val pinnedViewDefs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val viewRefreshGuard = new ThreadLocal[Set[String]] {
     override def initialValue(): Set[String] = Set.empty
   }
   private def refreshPlainViews(spark: SparkSession, q: String): Unit = {
-    if (graft.Catalog.plainViewReg.isEmpty && pinnedViewDefs.isEmpty) return
-    import scala.jdk.CollectionConverters._
-    val names = (graft.Catalog.plainViewReg.keySet.asScala ++
-      pinnedViewDefs.keySet.asScala).toSet -- viewRefreshGuard.get
+    val defs = SessionCatalog(spark).snapshot.collect {
+      case (n, m) if m.plainView.isDefined || m.pinnedView.isDefined =>
+        n -> (if (graft.ops.Checkpoint.active) m.pinnedView.orElse(m.plainView)
+          else m.plainView)
+    }.filterNot(d => viewRefreshGuard.get.contains(d._1))
+    if (defs.isEmpty) return
     val qLower = q.toLowerCase
-    names.foreach { n =>
+    defs.foreach { case (n, dOpt) =>
       if (("""(?<![\w])""" + java.util.regex.Pattern.quote(n) + """(?![\w])""").r
           .findFirstIn(qLower).isDefined) {
-        val d =
-          if (graft.ops.Checkpoint.active && pinnedViewDefs.containsKey(n))
-            pinnedViewDefs.get(n)
-          else graft.Catalog.plainViewReg.get(n)
-        if (d != null) {
+        dOpt.foreach { d =>
           viewRefreshGuard.set(viewRefreshGuard.get + n)
           try sqlBound(spark, d, Map.empty).createOrReplaceTempView(n)
           catch { case _: Exception => () }
@@ -463,7 +410,7 @@ object QuestSql {
       // but when the query text itself references __rn, this is a nested
       // materialization of the latest-on rewrite's own scaffolding and
       // the outer level still needs the column
-      dedupOutputColumns(tagNsColumns(query,
+      dedupOutputColumns(tagNsColumns(SessionCatalog(spark), query,
         if (df.columns.contains("__rn") && !query.contains("__rn")) df.drop("__rn") else df))
     }
 
@@ -493,11 +440,10 @@ object QuestSql {
 
   /** Is `ident` (a bare/qualified identifier) a declared TIMESTAMP_NS
     * column of a table the statement references? */
-  private def declaredNsCol(qLower: String, ident: String): Boolean = {
+  private def declaredNsCol(cat: SessionCatalog, qLower: String, ident: String): Boolean = {
     if (!ident.matches("[\\w.]+")) return false
     val n = ident.split('.').last.toLowerCase
-    import scala.jdk.CollectionConverters._
-    graft.Catalog.declaredCols.asScala.exists { case (tbl, cols) =>
+    cat.declared.exists { case (tbl, cols) =>
       refTable(qLower, tbl) &&
         cols.get(n).exists(_.tpe.toUpperCase.startsWith("TIMESTAMP_NS"))
     }
@@ -508,13 +454,12 @@ object QuestSql {
     * NSEC_UTC pattern (cairo TimestampDriver ns formatting). Name-based:
     * the output column keeps the source column's name in the dialect's
     * select-list conventions. */
-  private def tagNsColumns(q: String, df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
+  private def tagNsColumns(cat: SessionCatalog, q: String, df: DataFrame): DataFrame = {
     val qLower = q.toLowerCase
     def referenced(table: String): Boolean = refTable(qLower, table)
     var nsCols = Set.empty[String]
     var usTsCols = Set.empty[String] // declared micro-precision timestamps
-    graft.Catalog.declaredCols.asScala.foreach { case (tbl, cols) =>
+    cat.declared.foreach { case (tbl, cols) =>
       if (qLower.contains(tbl) && referenced(tbl)) {
         nsCols ++= cols.collect {
           case (n, d) if d.tpe.toUpperCase.startsWith("TIMESTAMP_NS") => n
@@ -526,7 +471,7 @@ object QuestSql {
         // a CTAS table declares no µs columns explicitly, but its
         // registered designated ts is µs unless it IS an ns column
         // (LtTimestampFunctionFactoryTest: mixed ts + ts_ns via CTAS)
-        Option(tsRegistry.get(tbl)).map(_.toLowerCase)
+        cat.designatedTs(tbl).map(_.toLowerCase)
           .filterNot(n => cols.get(n).exists(_.tpe.toUpperCase.startsWith("TIMESTAMP_NS")))
           .foreach(usTsCols += _)
       }
@@ -629,22 +574,24 @@ object QuestSql {
     * single name, not schema.table; CreateTableTest/SampleByTest).
     * Spark temp views reject multi-part names, so dotted names mangle
     * to `__dot__` consistently across creation and every reference
-    * spelling (quoted, double-quoted, backticked, bare). */
-  private val dottedTables = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def mangleDottedTables(q0: String): String = {
+    * spelling (quoted, double-quoted, backticked, bare). A CREATE files
+    * the mangled name in the catalog; the session's dotted names are
+    * the catalog keys that carry the marker. */
+  private def mangleDottedTables(cat: SessionCatalog, q0: String): String = {
     var q = q0
     """(?is)\bcreate\s+table(?:\s+if\s+not\s+exists)?\s+['"`]([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+)['"`]""".r
-      .findAllMatchIn(q).foreach(m => dottedTables.add(m.group(1).toLowerCase))
-    if (dottedTables.isEmpty) return q
+      .findAllMatchIn(q).foreach(m => cat.update(m.group(1).replace(".", "__dot__"))(identity))
     if (!q.contains(".")) return q
+    val dotted = cat.snapshot.map(_._1).filter(_.contains("__dot__")).map(_.replace("__dot__", "."))
+    if (dotted.isEmpty) return q
     // quoted spellings — only names the session actually created
     q = """['"`]([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)+)['"`]""".r.replaceAllIn(q, m =>
-      if (dottedTables.contains(m.group(1).toLowerCase))
+      if (dotted.contains(m.group(1).toLowerCase))
         java.util.regex.Matcher.quoteReplacement(m.group(1).replace(".", "__dot__"))
       else java.util.regex.Matcher.quoteReplacement(m.matched))
     // bare spellings — outside string literals only (a dotted name
     // inside a string is content, e.g. an error-message assertion)
-    dottedTables.forEach { n =>
+    dotted.foreach { n =>
       q = DialectRewrites.mapOutside(q)(
         _.replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b",
           java.util.regex.Matcher.quoteReplacement(n.replace(".", "__dot__"))))
@@ -658,12 +605,13 @@ object QuestSql {
     * unit bridge — scale the µs side to nanos (exact; the reverse
     * direction would truncate). Name-based over the referenced tables'
     * declared column types, like tagNsColumns. */
-  private def nsMixedComparisons(q0: String): String = {
-    import scala.jdk.CollectionConverters._
-    if (!q0.contains("_ns") || graft.Catalog.declaredCols.isEmpty) return q0
+  private def nsMixedComparisons(cat: SessionCatalog, q0: String): String = {
+    if (!q0.contains("_ns")) return q0
+    val declared = cat.declared
+    if (declared.isEmpty) return q0
     val qLower = q0.toLowerCase
     var nsCols = Set.empty[String]; var usCols = Set.empty[String]
-    graft.Catalog.declaredCols.asScala.foreach { case (tbl, cols) =>
+    declared.foreach { case (tbl, cols) =>
       if (qLower.contains(tbl)) {
         nsCols ++= cols.collect {
           case (n, d) if d.tpe.toUpperCase.startsWith("TIMESTAMP_NS") => n.toLowerCase }
@@ -674,9 +622,9 @@ object QuestSql {
     }
     // CTAS tables declare no µs columns — their DESIGNATED ts is still
     // known through the registry
-    graft.Catalog.declaredCols.asScala.keys.foreach { tbl =>
+    declared.foreach { case (tbl, _) =>
       if (qLower.contains(tbl))
-        Option(tsRegistry.get(tbl)).map(_.toLowerCase)
+        cat.designatedTs(tbl).map(_.toLowerCase)
           .filterNot(nsCols).foreach(usCols += _)
     }
     if (nsCols.isEmpty || usCols.isEmpty) return q0
@@ -770,7 +718,8 @@ object QuestSql {
     // (weighted_stddev → weighted_stddev_rel_ref, vec_dot, …) — make the
     // registry exist no matter which statement reaches a session first
     graft.Engine.ensureFunctions(spark)
-    var q0 = mangleDottedTables(expandDeclare(query.trim.stripSuffix(";")))
+    val cat = SessionCatalog(spark)
+    var q0 = mangleDottedTables(cat, expandDeclare(query.trim.stripSuffix(";")))
     // accumulate across the statement's recursive sub-evaluations (the
     // tails are dropped before subquery materialization re-enters here)
     innerDesignations.set(innerDesignations.get ++
@@ -780,7 +729,7 @@ object QuestSql {
     // zero-column result in the reference
     if (q0.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("--[^\n]*", "").trim.isEmpty)
       return spark.emptyDataFrame
-    rejectDecimalScaleMismatchJoin(q0)
+    rejectDecimalScaleMismatchJoin(cat, q0)
     // single-quoted select-item aliases (`sym AS 'sym'`) are identifier
     // quotes in the reference; Spark wants backticks
     if (!firstWord(q0).equalsIgnoreCase("copy"))
@@ -881,7 +830,7 @@ object QuestSql {
           splitSelect(m.group(2)).foreach { item =>
             """(?is)^\s*0x([0-9a-f]+)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r
               .findFirstMatchIn(item).foreach { hm =>
-                graft.Catalog.mergeDeclaredCol(tbl, hm.group(2), "LONG256")
+                cat.update(tbl)(_.withColumnIfAbsent(hm.group(2), "LONG256"))
                 q0 = q0.replace(item,
                   s" '0x${hm.group(1).toLowerCase}' AS ${hm.group(2)}")
               }
@@ -897,16 +846,16 @@ object QuestSql {
               """(?is)^(.*\S)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r
                 .findFirstMatchIn(item.trim)
                 .filterNot(mm => mm.group(2).equalsIgnoreCase("long256"))
-                .foreach(mm => graft.Catalog.mergeDeclaredCol(
-                  unq(m.group(1)).split('.').last, mm.group(2), "LONG256"))
+                .foreach(mm => cat.update(unq(m.group(1)))(
+                  _.withColumnIfAbsent(mm.group(2), "LONG256")))
           }
         }
-    q0 = prof("DialectRewrites")(DialectRewrites(q0))
+    q0 = prof("DialectRewrites")(DialectRewrites(q0, cat))
     // CTAS ns provenance must be read BEFORE the fn-macro pass erases
     // the spellings (to_timestamp_ns / timestamp_sequence_ns expand to
     // plain arithmetic)
-    preRegisterCtasNs(q0)
-    preRegisterCtasIpv4(q0)
+    preRegisterCtasNs(cat, q0)
+    preRegisterCtasIpv4(cat, q0)
     // reference-style result-set naming for unaliased expressions
     // (SqlUtil.createColumnAlias): `select 1+1` → column, `count()` →
     // count, duplicate bases get numeric suffixes
@@ -927,10 +876,10 @@ object QuestSql {
     q0 = prof("AutoAlias")(AutoAlias.rewriteQuery(q0))
     // sliding time-RANGE first/last_value → O(n) running-frame
     // aggregates (after AutoAlias so reference default names are pinned)
-    q0 = prof("slidingValueFrames")(DialectRewrites.slidingValueFrames(q0))
+    q0 = prof("slidingValueFrames")(DialectRewrites.slidingValueFrames(q0, cat))
     // LATEST ON … SAMPLE BY …: latest-selection first, sampling second
     q0 = prof("latestThenSample")(rewriteLatestThenSampleBy(q0))
-    q0 = prof("nsMixedComparisons")(nsMixedComparisons(q0))
+    q0 = prof("nsMixedComparisons")(nsMixedComparisons(cat, q0))
     // lateral-join parity: decorrelate bodies Spark's lateral planner
     // cannot host (deep refs, correlated set-ops, dialect operators) and
     // align empty-group semantics with the reference's count driver
@@ -954,7 +903,7 @@ object QuestSql {
     // the pass-through keeps markers and uses Spark's parameter binder
     // key-predicate pushdown past SAMPLE BY FILL must precede BOTH the
     // forms path and the fallback (which re-derives from q0)
-    q0 = pushFilterIntoSampleBy(q0)
+    q0 = pushFilterIntoSampleBy(cat, q0)
     q0 = evalSampleByBounds(spark, q0)
     // set-op operands holding dialect ops are evaluated per-operand into
     // views BEFORE the whole-query form matchers (which would otherwise
@@ -964,7 +913,7 @@ object QuestSql {
     q0 = prof("unionFirstApp")(unionFirstAppearance(spark, q0))
     q0 = prof("fullJoinOrder")(fullJoinAppearanceOrder(spark, q0))
     val qForms = prof("qForms")(rewriteTableFns(spark, rewriteTsAggs(spark,
-      rewriteFnMacros(rewriteIntervalLiterals(normalizeSampleByStride(
+      rewriteFnMacros(cat, rewriteIntervalLiterals(normalizeSampleByStride(
         if (named.isEmpty) q0 else substParams(q0, named)))))))
     val qSub0 = prof("materializeSub")(materializeDialectSubqueries(spark, qForms))
     val qSub = prof("materializeWjm")(materializeWindowJoinMaster(spark, qSub0))
@@ -981,7 +930,7 @@ object QuestSql {
         // the fallback re-derives from q0 to keep :name markers for
         // Spark's parameter binder — re-apply the table-fn substitution
         val rewritten = prof("fb:rewrite")(materializeDialectSubqueries(spark, windowOrderTail(spark,
-          rewriteTableFns(spark, rewriteTsAggs(spark, rewrite(q0))))))
+          rewriteTableFns(spark, rewriteTsAggs(spark, rewrite(q0, cat))))))
         // QuestDB comparisons are value-based, not three-valued: null =
         // null is TRUE, x != null is TRUE (reference docs; UuidTest
         // `cast(null as string) = cast(null as uuid)` → true). Lower =
@@ -1405,7 +1354,7 @@ object QuestSql {
       }
       val ts0 =
         if (table0.isEmpty) None
-        else Option(tsRegistry.get(table0.split('.').last.toLowerCase)).orElse {
+        else SessionCatalog(spark).designatedTs(table0).orElse {
           try {
             val f = spark.table(table0).schema.fields
             if (f.exists(_.name == "ts")) Some("ts") else None
@@ -1517,7 +1466,7 @@ object QuestSql {
     val table = q.substring(fromAt + 4).trim
       .takeWhile(c => c.isLetterOrDigit || c == '_' || c == '.')
     if (table.isEmpty) return q
-    val ts = Option(tsRegistry.get(table.split('.').last.toLowerCase))
+    val ts = SessionCatalog(spark).designatedTs(table)
       .orElse {
         try {
           val f = spark.table(table).schema.fields
@@ -1533,7 +1482,7 @@ object QuestSql {
           .findFirstMatchIn(q).map(_.group(1)).flatMap { body =>
             """(?is)\bFROM\s+([A-Za-z_][\w.]*)""".r.findFirstMatchIn(body)
               .map(_.group(1)).flatMap { inner =>
-                Option(tsRegistry.get(inner.split('.').last.toLowerCase))
+                SessionCatalog(spark).designatedTs(inner)
                   .filter(t => """(?is)^\s*SELECT\s+\*""".r.findFirstIn(body.trim).isDefined ||
                     body.toLowerCase.contains(t.toLowerCase))
               }
@@ -1831,8 +1780,8 @@ object QuestSql {
     try {
       sqlBound(spark, s"SELECT * FROM $rel", Map.empty).createOrReplaceTempView(v)
     } catch { case _: Exception => return q0 }
-    Option(tsRegistry.get(firstTable.split('.').last.toLowerCase))
-      .foreach(registerDesignatedTs(v, _))
+    val cat = SessionCatalog(spark)
+    cat.designatedTs(firstTable).foreach(t => cat.update(v)(_.copy(designatedTs = Some(t))))
     val head = q0.substring(0, fromAt)
     val tail = q0.substring(wjAt)
     val stripped = aliases.foldLeft(head) { (acc, a) =>
@@ -1975,11 +1924,10 @@ object QuestSql {
     * of different declared precision/scale (no implicit decimal
     * rescale in the join key path — JoinTest decimal keys). Spark would
     * happily widen both sides; match the rejection. */
-  private def rejectDecimalScaleMismatchJoin(q0: String): Unit = {
+  private def rejectDecimalScaleMismatchJoin(cat: SessionCatalog, q0: String): Unit = {
     if (!"""(?i)\bjoin\b""".r.findFirstIn(q0).isDefined) return
     def declOf(t: String, c: String): Option[String] =
-      Option(graft.Catalog.declaredCols.get(t.toLowerCase))
-        .flatMap(cols => cols.get(c.toLowerCase).map(_.tpe.toUpperCase.replaceAll("\\s+", "")))
+      cat.get(t).flatMap(_.declaredType(c)).map(_.replaceAll("\\s+", ""))
     """(?i)\bon\s+(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)""".r.findAllMatchIn(q0).foreach { m =>
       (declOf(m.group(1), m.group(2)), declOf(m.group(3), m.group(4))) match {
         case (Some(d1), Some(d2))
@@ -2394,41 +2342,30 @@ object QuestSql {
   // These are session views materialized via localCheckpoint so a later
   // INSERT into the base table does NOT leak in until REFRESH — the
   // durable day-partitioned incremental path is graft.streaming.MatView.
-  private final case class MatViewDef(inner: String, base: Option[String],
-    refreshKind: String, deferred: Boolean)
-  private val matViewDefs =
-    new java.util.concurrent.ConcurrentHashMap[String, MatViewDef]()
-
-  /** Dirty designated-ts ranges per auto-refresh mat view (micros,
-    * half-open; [[FullRange]] = recompute everything). Marked by the
-    * dialect's own write sites, consumed lazily at the next read of the
-    * view — the Spark re-expression of reference MatViewRefreshJob's
-    * WalTxnRangeLoader walk (cairo/mv/MatViewRefreshJob.java:77,
-    * WalTxnRangeLoader.java): refresh cost scales with the data touched
-    * since the last read, never with the base table. A clean view
-    * serves its pinned checkpoint with NO base scan. */
-  private val FullRange: (Long, Long) = (Long.MinValue, Long.MaxValue)
-  private val matViewDirty =
-    new java.util.concurrent.ConcurrentHashMap[String, List[(Long, Long)]]()
-
-  private def autoRefresh(d: MatViewDef): Boolean =
-    !d.deferred && (d.refreshKind == "IMMEDIATE" ||
-      d.refreshKind.startsWith("EVERY") || d.refreshKind.startsWith("PERIOD"))
+  //
+  // Each view's TableMeta.MatView carries the dirty designated-ts ranges
+  // (micros, half-open; FullRange = recompute everything) marked by the
+  // dialect's own write sites and consumed lazily at the next read of
+  // the view — the Spark re-expression of reference MatViewRefreshJob's
+  // WalTxnRangeLoader walk (cairo/mv/MatViewRefreshJob.java:77,
+  // WalTxnRangeLoader.java): refresh cost scales with the data touched
+  // since the last read, never with the base table. A clean view serves
+  // its pinned checkpoint with NO base scan.
+  private val FullRange = TableMeta.FullRange
 
   /** Mark every auto-refresh mat view over `baseTable` dirty for
     * [lo, hi) (micros). Call with [[FullRange]] for non-ranged
     * mutations (UPDATE / TRUNCATE / ALTER / COPY). */
-  private[sql] def markMatViewsDirty(baseTable: String, lo: Long, hi: Long): Unit = {
-    if (matViewDefs.isEmpty) return
-    val b = baseTable.split('.').last.toLowerCase
-    matViewDefs.forEach { (key, d) =>
-      if (autoRefresh(d)) {
-        val depBase = Option(graft.Catalog.matViewMeta.get(key)).map(_._1)
-          .orElse(d.base).getOrElse("")
-        if (depBase != null && depBase.split('.').last.equalsIgnoreCase(b))
-          matViewDirty.merge(key, List((lo, hi)),
-            (a, nw) => if (a.size >= 32) List(FullRange) else a ++ nw)
-      }
+  private[sql] def markMatViewsDirty(cat: SessionCatalog, baseTable: String,
+                                     lo: Long, hi: Long): Unit = {
+    val b = SessionCatalog.key(baseTable)
+    def over(d: TableMeta.MatView) =
+      d.autoRefresh && d.base != null && SessionCatalog.key(d.base) == b
+    cat.views.foreach {
+      case (key, d: TableMeta.MatView) if over(d) =>
+        cat.update(key)(m => m.copy(view = m.matView.filter(over).map(v => v.copy(dirty =
+          if (v.dirty.size >= 32) List(FullRange) else v.dirty :+ ((lo, hi)))).orElse(m.view)))
+      case _ =>
     }
   }
 
@@ -2442,20 +2379,26 @@ object QuestSql {
     * offset / fill / first-observation / calendar strides / unknown ts)
     * falls back to a full recompute. */
   private def refreshDirtyMatViews(spark: SparkSession, q: String): Unit = {
-    if (matViewDirty.isEmpty) return
+    val cat = SessionCatalog(spark)
+    val dirty = cat.views.collect {
+      case (key, d: TableMeta.MatView) if d.dirty.nonEmpty => key }
+    if (dirty.isEmpty) return
     if ("""(?is)^\s*(?:CREATE|DROP|REFRESH)\s+MATERIALIZED""".r.findFirstIn(q).isDefined)
       return
-    val keys = new java.util.ArrayList(matViewDirty.keySet())
-    keys.forEach { key =>
+    dirty.foreach { key =>
       if (("""(?i)\b""" + java.util.regex.Pattern.quote(key) + """\b""").r
           .findFirstIn(q).isDefined) {
-        val d = matViewDefs.get(key)
-        val ranges = matViewDirty.remove(key)
-        if (d != null && ranges != null && ranges.nonEmpty) {
-          try incrementalMatRefresh(spark, key, d, ranges)
+        // take the ranges: the record keeps the view, now clean
+        var taken: Option[TableMeta.MatView] = None
+        cat.update(key) { m =>
+          taken = m.matView
+          m.copy(view = m.matView.map(_.copy(dirty = Nil)).orElse(m.view))
+        }
+        taken.filter(_.dirty.nonEmpty).foreach { d =>
+          try incrementalMatRefresh(spark, key, d)
           catch {
             case _: Throwable =>
-              try materializeMatView(spark, key, sqlBound(spark, d.inner, Map.empty))
+              try materializeMatView(spark, key, sqlBound(spark, d.sql, Map.empty))
               catch { case _: Throwable => () }
           }
         }
@@ -2464,17 +2407,16 @@ object QuestSql {
   }
 
   private def incrementalMatRefresh(spark: SparkSession, key: String,
-      d: MatViewDef, ranges0: List[(Long, Long)]): Unit = {
-    val inner = d.inner
+                                    d: TableMeta.MatView): Unit = {
+    val inner = d.sql
+    val ranges0 = d.dirty
     val bucketLit = """(?is)\bSAMPLE\s+BY\s+(\w+)""".r.findFirstMatchIn(inner).map(_.group(1))
     // only the plain epoch-aligned SAMPLE BY shape refreshes surgically
     val plain = bucketLit.isDefined &&
       !"""(?is)\bTIME\s+ZONE\b|\bWITH\s+OFFSET\b|\bFIRST\s+OBSERVATION\b|\bFILL\s*\(|\bSAMPLE\s+BY\s+\w+\s+FROM\b""".r
         .findFirstIn(inner).isDefined
-    val baseName = Option(graft.Catalog.matViewMeta.get(key)).map(_._1)
-      .orElse(d.base).orNull
-    val tsCol = Option(baseName)
-      .flatMap(b => designatedTsOf(b.split('.').last.toLowerCase))
+    val baseName = d.base
+    val tsCol = Option(baseName).flatMap(SessionCatalog(spark).designatedTs)
     lazy val view = spark.table(key)
     val viewTs = tsCol.flatMap(t => view.schema.fields
         .find(_.name.equalsIgnoreCase(t)).map(_.name))
@@ -2545,8 +2487,6 @@ object QuestSql {
     """(?is)^DROP\s+LIVE\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*$""".r
   private val DropAllRe = """(?is)^DROP\s+ALL(?:\s+TABLES)?\s*$""".r
 
-  private val liveViewDefs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]() // name -> stored SELECT
   private val lvRebinding = new ThreadLocal[java.util.HashSet[String]] {
     override def initialValue() = new java.util.HashSet[String]()
   }
@@ -2566,9 +2506,11 @@ object QuestSql {
     * reference other views, never itself.
     */
   private def refreshLiveViews(spark: SparkSession, q: String): Unit = {
-    if (liveViewDefs.isEmpty || """(?is)^\s*(?:CREATE|DROP)\s+LIVE\s+VIEW""".r
+    val defs = SessionCatalog(spark).views.collect {
+      case (name, TableMeta.LiveView(_, _, Some(inner), _)) => (name, inner) }
+    if (defs.isEmpty || """(?is)^\s*(?:CREATE|DROP)\s+LIVE\s+VIEW""".r
       .findFirstIn(q).isDefined) return
-    liveViewDefs.forEach { (name, inner) =>
+    defs.foreach { case (name, inner) =>
       if (("""(?i)\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
         .findFirstIn(q).isDefined && lvRebinding.get.add(name)) {
         try sqlBound(spark, inner, Map.empty).createOrReplaceTempView(name)
@@ -2645,6 +2587,12 @@ object QuestSql {
     """(?is)^RESUME\s+WAL(?:\s+FROM\s+(?:TXN|TRANSACTION)\s+\d+)?\s*$""".r
   private def unquote1(s: String): String =
     if (s.startsWith("'")) s.substring(1, s.length - 1) else s
+  private def suspendWal(cat: SessionCatalog, name: String, tag: String, msg: String): Unit =
+    cat.update(unq(name))(_.copy(wal = TableMeta.WalState(suspended = true,
+      Option(tag).map(unquote1).getOrElse("NONE"), Option(msg).map(unquote1).orNull)))
+  /** A view whose CHECKPOINT-pinned definition still serves reads. */
+  private def pinned(cat: SessionCatalog, name: String): Boolean =
+    graft.ops.Checkpoint.active && cat.get(unq(name)).exists(_.pinnedView.isDefined)
 
   // ALTER TABLE SET FORMAT / CONVERT PARTITION — parquet-format
   // bookkeeping for table_partitions() (reference TableFormatTest,
@@ -2809,10 +2757,11 @@ object QuestSql {
       graft.Catalog.invalidateMetaViews(spark)
       graft.Tables.forgetRegistration(spark)
     }
-    statementForm0(spark, q)
+    statementForm0(spark, SessionCatalog(spark), q)
   }
 
-  private def statementForm0(spark: SparkSession, q: String): Option[DataFrame] = q match {
+  private def statementForm0(spark: SparkSession, cat: SessionCatalog,
+                             q: String): Option[DataFrame] = q match {
     case CheckpointRe(verb, legacyVerb) =>
       val v = Option(verb).getOrElse(legacyVerb match {
         case p if p.equalsIgnoreCase("PREPARE") => "CREATE"
@@ -2824,13 +2773,12 @@ object QuestSql {
         // evaluate the definition as of CREATE over live data
         // (reference CheckpointTest: post-checkpoint inserts show
         // through a view, post-checkpoint ALTER VIEW does not)
-        pinnedViewDefs.clear()
-        pinnedViewDefs.putAll(graft.Catalog.plainViewReg)
+        cat.updateAll(m => m.copy(pinnedView = m.plainView))
         import spark.implicits._
         Some(Seq(dir).toDF("checkpoint_dir"))
       } else {
         graft.ops.Checkpoint.release()
-        pinnedViewDefs.clear()
+        cat.updateAll(_.copy(pinnedView = None))
         Some(status(spark, "OK"))
       }
     case CreateMatViewRe(name0, base, refreshTail, innerParen, innerBare) =>
@@ -2845,7 +2793,6 @@ object QuestSql {
         case Some("INCREMENTAL") | None => "IMMEDIATE" // obsolete alias / default
         case Some(k) => k
       }
-      matViewDefs.put(key, MatViewDef(inner, Option(base), kind, deferred != null))
       val df0 = sqlBound(spark, inner, Map.empty)
       materializeMatView(spark, name, if (deferred != null) df0.limit(0) else df0)
       // REFRESH IMMEDIATE (the default) and timer kinds refresh on base
@@ -2856,24 +2803,22 @@ object QuestSql {
       // an explicit REFRESH.
       val bucket = """(?is)SAMPLE\s+BY\s+(\w+)""".r.findFirstMatchIn(inner)
         .map(_.group(1)).getOrElse("")
-      graft.Catalog.registerMatView(key, bucket, kind)
-      graft.Catalog.matViewMeta.put(key, (
-        Option(base).getOrElse(
-          """(?is)\bFROM\s+[`']?([\w.]+)""".r.findFirstMatchIn(inner)
-            .map(_.group(1)).orNull),
-        inner))
+      val baseTable = Option(base).getOrElse(
+        """(?is)\bFROM\s+[`']?([\w.]+)""".r.findFirstMatchIn(inner).map(_.group(1)).orNull)
+      cat.update(key)(_.copy(view = Some(
+        TableMeta.MatView(inner, baseTable, kind, deferred != null, bucket))))
       Some(status(spark, "OK"))
 
     case RefreshMatViewRe(name, kindRaw, from, to) =>
       val key = name.split('.').last.toLowerCase
-      val d = Option(matViewDefs.get(key)).getOrElse(throw new IllegalArgumentException(
+      val d = cat.get(key).flatMap(_.matView).getOrElse(throw new IllegalArgumentException(
         s"materialized view does not exist [view=$name]"))
       Option(kindRaw).map(_.toUpperCase) match {
         case Some("STATS") => Some(status(spark, "OK")) // cost-model reset: metadata-only
         case kind =>
-          val fresh0 = sqlBound(spark, d.inner, Map.empty)
+          val fresh0 = sqlBound(spark, d.sql, Map.empty)
           if (kind.isEmpty) { // RANGE FROM .. TO: surgical window replace
-            val tsCol = Option(tsRegistry.get(key)).getOrElse("ts")
+            val tsCol = cat.designatedTs(key).getOrElse("ts")
             require(fresh0.columns.contains(tsCol),
               s"RANGE refresh needs timestamp column '$tsCol' in the view output")
             val lo = lit(from).cast("timestamp"); val hi = lit(to).cast("timestamp")
@@ -2881,7 +2826,7 @@ object QuestSql {
             val keep = spark.table(name).where(col(tsCol) < lo || col(tsCol) > hi)
             materializeMatView(spark, name, keep.unionByName(fresh))
           } else materializeMatView(spark, name, fresh0) // FULL | INCREMENTAL
-          matViewDirty.remove(key)
+          cat.update(key)(m => m.copy(view = m.matView.map(_.copy(dirty = Nil)).orElse(m.view)))
           // the row count serves LAZILY off the just-pinned checkpoint
           // blocks — scripted REFRESH statements that discard the result
           // then pay no extra count job
@@ -2909,33 +2854,31 @@ object QuestSql {
           case Some(bm) =>
             val b = unq(bm.group(1))
             val bn = b.split('.').last
-            val ts = designatedTsOf(bn.toLowerCase)
-              .orElse(graft.Tables.designatedTs.get(bn.toLowerCase)).getOrElse("ts")
+            val ts = cat.designatedTs(bn).getOrElse("ts")
             inner.substring(0, bm.start(1)) +
               s"(SELECT * FROM $bn WHERE $ts >= $lit) $bn" +
               inner.substring(bm.end(1))
           case None => inner
         }
       }.getOrElse(inner)
-      liveViewDefs.put(key, innerStored)
       sqlBound(spark, innerStored, Map.empty).createOrReplaceTempView(key)
-      // always-fresh serving: the seam is "now" at every listing
-      graft.Catalog.registerLiveView(key, s"<session flush=${flushUs}us>",
-        () => System.currentTimeMillis() * 1000L)
       val base = """(?is)\bFROM\s+([\w.`]+)""".r.findFirstMatchIn(inner)
         .map(m2 => unq(m2.group(1))).getOrElse("")
-      graft.Catalog.liveViewMeta.put(key, graft.Catalog.LiveViewMeta(
+      val spec = TableMeta.LiveSpec(
         base, inner.trim,
         flushN.toLong, flushUnit,
         Option(memN).map(_.toLong).getOrElse(flushN.toLong),
         Option(memUnit).getOrElse(flushUnit),
         Option(partBy).map(_.toUpperCase).getOrElse("DAY"),
-        Option(startFrom).getOrElse("NOW")))
+        Option(startFrom).getOrElse("NOW"))
+      // always-fresh serving: the seam is "now" at every listing
+      cat.update(key)(_.copy(view = Some(TableMeta.LiveView(s"<session flush=${flushUs}us>",
+        () => System.currentTimeMillis() * 1000L, Some(innerStored), Some(spec)))))
       Some(status(spark, "OK"))
 
     case ShowCreateLiveViewRe(name) =>
       val key = unq(name).split('.').last.toLowerCase
-      val m = Option(graft.Catalog.liveViewMeta.get(key)).getOrElse(
+      val m = cat.get(key).flatMap(_.liveView).flatMap(_.spec).getOrElse(
         throw new IllegalArgumentException(s"live view does not exist [view=$name]"))
       import spark.implicits._
       // reference ShowCreateTableOperation live-view canonical text
@@ -2946,10 +2889,8 @@ object QuestSql {
 
     case DropLiveViewRe(name) =>
       val key = name.split('.').last.toLowerCase
-      liveViewDefs.remove(key)
       spark.catalog.dropTempView(key)
-      graft.Catalog.unregisterLiveView(key)
-      graft.Catalog.liveViewMeta.remove(key)
+      cat.remove(key)
       Some(status(spark, "OK"))
 
     case DropAllRe() =>
@@ -2960,33 +2901,26 @@ object QuestSql {
         if (!t.name.startsWith("__"))
           try spark.catalog.dropTempView(t.name) catch { case _: Exception => () }
       }
-      liveViewDefs.clear(); matViewDefs.clear(); matViewDirty.clear()
-      graft.Catalog.clearTableRegistries()
-      retainDesignatedTs(graft.Tables.designatedTs.keySet)
+      cat.clear()
       graft.Catalog.invalidateMetaViews(spark)
       Some(status(spark, "OK"))
 
     case DropMatViewRe(name) =>
-      val key = name.split('.').last.toLowerCase
-      matViewDefs.remove(key)
-      matViewDirty.remove(key)
-      liveViewDefs.remove(key)
-      graft.Catalog.unregisterMatView(key)
+      cat.remove(name)
       spark.catalog.dropTempView(name)
       Some(status(spark, "OK"))
 
     case AlterRe(name, action) =>
-      markMatViewsDirty(name, FullRange._1, FullRange._2)
+      markMatViewsDirty(cat, name, FullRange._1, FullRange._2)
       val t = spark.table(name)
       graft.Catalog.invalidateMetaViews(spark)
       action match {
         case SuspendWalRe(tag, msg) =>
-          graft.Catalog.suspendWal(unq(name),
-            Option(tag).map(unquote1).getOrElse("NONE"),
-            Option(msg).map(unquote1).orNull)
+          suspendWal(cat, name, tag, msg)
           Some(status(spark, "OK"))
         case ResumeWalRe(_*) =>
-          graft.Catalog.resumeWal(unq(name)); Some(status(spark, "OK"))
+          cat.update(unq(name))(_.copy(wal = TableMeta.WalRunning))
+          Some(status(spark, "OK"))
         case SetFormatRe(fmt) =>
           graft.Catalog.setTableFormat(spark, unq(name),
             fmt.equalsIgnoreCase("parquet"))
@@ -2995,8 +2929,7 @@ object QuestSql {
             // partition conversion requires a WAL table — on a non-WAL
             // table the statement validates and does nothing
             // (CoveringIndexTest t_repro_nowal: isParquet stays false)
-            if Option(graft.Catalog.createMeta.get(unq(name).toLowerCase))
-              .exists(!_.walEnabled) =>
+            if cat.get(unq(name)).exists(m => m.created && !m.walEnabled) =>
           spark.table(name) // validate existence
           Some(status(spark, "OK"))
         case ConvertPartRe(fmt, list, where) =>
@@ -3036,19 +2969,24 @@ object QuestSql {
           // insert); DISABLE clears them
           """(?is)^DEDUP\s+ENABLE\s+UPSERT\s+KEYS\s*\(([^)]*)\)""".r
             .findFirstMatchIn(action.trim).foreach { m2 =>
-              graft.Catalog.registerDedupKeys(unq(name),
-                m2.group(1).split(",").map(_.trim.toLowerCase).toSeq)
+              cat.update(unq(name))(
+                _.copy(dedupKeys = m2.group(1).split(",").map(_.trim.toLowerCase).toSeq))
             }
           if (action.trim.toUpperCase.startsWith("DEDUP DISABLE"))
-            graft.Catalog.registerDedupKeys(unq(name), Nil)
+            cat.update(unq(name))(_.copy(dedupKeys = Nil))
           // ADD/DROP INDEX flips the declared-column knob so
           // table_columns()/SHOW COLUMNS answer indexed-ness
           // (reference AlterOperationBuilder.ofAddIndex)
           """(?is)^ALTER\s+COLUMN\s+(\w+)\s+(ADD|DROP)\s+INDEX(.*)$""".r
             .findFirstMatchIn(action.trim).foreach { im =>
-              graft.Catalog.updateColKnobs(name, im.group(1),
+              val c = im.group(1).toLowerCase
+              val knobs =
                 if (im.group(2).equalsIgnoreCase("ADD")) "INDEX" + im.group(3).toUpperCase
-                else "")
+                else ""
+              // keeps the declared type; a table without a column list
+              // gets a SYMBOL declaration
+              cat.update(name)(m => m.copy(columns = m.columns + (c -> TableMeta.ColDecl(
+                m.columns.get(c).map(_.tpe).getOrElse("SYMBOL"), knobs))))
             }
           Some(status(spark, "OK"))
         case AlterDropPartRe(_, list, whereCond) =>
@@ -3085,11 +3023,12 @@ object QuestSql {
           names.foreach(c => require(t.columns.exists(_.equalsIgnoreCase(c)),
             s"column '$c' does not exist in $name"))
           t.drop(names: _*).createOrReplaceTempView(name)
-          names.foreach(graft.Catalog.dropSymbolDictCol(name, _))
+          cat.update(name)(m => m.copy(symbols = m.symbols -- names.map(_.toLowerCase)))
           Some(status(spark, "OK"))
         case AlterRenameColRe(from, to) =>
           t.withColumnRenamed(from, to).createOrReplaceTempView(name)
-          graft.Catalog.renameSymbolDictCol(name, from, to)
+          cat.update(name)(m => m.copy(symbols = m.symbols.get(from.toLowerCase)
+            .fold(m.symbols)(d => m.symbols - from.toLowerCase + (to.toLowerCase -> d))))
           Some(status(spark, "OK"))
         case AlterColTypeRe(c, typ) =>
           require(t.columns.exists(_.equalsIgnoreCase(c)), s"column '$c' does not exist")
@@ -3112,8 +3051,7 @@ object QuestSql {
       // results for declared SYMBOL columns into the write-time symbol
       // dictionary in the same pass that counts affected rows
       val symAssigns = assigns.filter { case (c, _) =>
-        Option(graft.Catalog.declaredCols.get(name.split('.').last.toLowerCase))
-          .exists(_.get(c.toLowerCase).exists(_.tpe.toUpperCase.startsWith("SYMBOL")))
+        cat.get(name).exists(_.declares(c, "SYMBOL"))
       }
       // rows_updated is served LAZILY when no symbol bookkeeping rides
       // along: the one-row result counts the captured PRE-update plan
@@ -3134,7 +3072,7 @@ object QuestSql {
             val off = 1 + i * 2
             val vals = Option(r.getSeq[String](off)).getOrElse(Seq.empty)
             val sawNull = !r.isNullAt(off + 1) && r.getBoolean(off + 1)
-            if (vals.nonEmpty || sawNull) graft.Catalog.noteSymbolValues(name, c, vals, sawNull)
+            if (vals.nonEmpty || sawNull) graft.Catalog.noteSymbolValues(spark, name, c, vals, sawNull)
           }
           Seq(r.getLong(0)).toDF("rows_updated")
         }
@@ -3173,7 +3111,7 @@ object QuestSql {
         updated.createOrReplaceTempView(name)
         affected
       }
-      markMatViewsDirty(name, FullRange._1, FullRange._2)
+      markMatViewsDirty(cat, name, FullRange._1, FullRange._2)
       Some(n)
 
     case SessionNoopRe() =>
@@ -3217,39 +3155,36 @@ object QuestSql {
           .split("\n").toSeq.toDF("PLAN"))
     case AlterViewWalRe(name, walAction) =>
       walAction.trim match {
-        case SuspendWalRe(tag, msg) =>
-          graft.Catalog.suspendWal(unq(name).split('.').last,
-            Option(tag).map(unquote1).getOrElse("NONE"),
-            Option(msg).map(unquote1).orNull)
-        case _ => graft.Catalog.resumeWal(unq(name).split('.').last)
+        case SuspendWalRe(tag, msg) => suspendWal(cat, name, tag, msg)
+        case _ => cat.update(unq(name))(_.copy(wal = TableMeta.WalRunning))
       }
       Some(status(spark, "OK"))
     case AlterMatViewRe(name, kind) =>
-      val key = unq(name).split('.').last.toLowerCase
-      Option(matViewDefs.get(key)).foreach { d =>
-        if (kind != null)
-          matViewDefs.put(key, d.copy(refreshKind = kind.toUpperCase))
-      }
+      if (kind != null)
+        cat.get(unq(name)).flatMap(_.matView).foreach { d =>
+          cat.update(unq(name))(_.copy(view = Some(d.copy(refreshKind = kind.toUpperCase))))
+        }
       Some(status(spark, "OK"))
     // view DDL updates the CATALOG immediately; reads go through
     // refreshPlainViews, which re-evaluates the registered definition
     // per query and pins the checkpoint-time definition while a
     // checkpoint is active (reference CheckpointTest semantics)
     case CreateViewRe(name, inner) =>
-      if (!(graft.ops.Checkpoint.active && pinnedViewDefs.containsKey(unq(name).toLowerCase)))
+      if (!pinned(cat, name))
         sqlBound(spark, inner.trim, Map.empty).createOrReplaceTempView(unq(name))
-      graft.Catalog.plainViewReg.put(unq(name).toLowerCase, inner.trim)
+      cat.update(unq(name))(_.copy(view = Some(TableMeta.PlainView(inner.trim))))
       Some(status(spark, "OK"))
     case DropViewRe(name) =>
-      graft.Catalog.plainViewReg.remove(unq(name).toLowerCase)
-      if (graft.ops.Checkpoint.active && pinnedViewDefs.containsKey(unq(name).toLowerCase))
-        graft.ops.Checkpoint.defer(() =>
-          { try spark.catalog.dropTempView(unq(name)) catch { case _: Exception => () } })
-      else { try spark.catalog.dropTempView(unq(name)) catch { case _: Exception => () } }
+      def drop(): Unit = try spark.catalog.dropTempView(unq(name)) catch { case _: Exception => () }
+      // a pinned definition keeps serving until CHECKPOINT RELEASE
+      if (pinned(cat, name)) {
+        cat.update(unq(name))(_.copy(view = None))
+        graft.ops.Checkpoint.defer(() => drop())
+      } else { cat.remove(unq(name)); drop() }
       Some(status(spark, "OK"))
     case AlterViewAsRe(name, inner) =>
-      graft.Catalog.plainViewReg.put(unq(name).toLowerCase, inner.trim)
-      if (!(graft.ops.Checkpoint.active && pinnedViewDefs.containsKey(unq(name).toLowerCase)))
+      cat.update(unq(name))(_.copy(view = Some(TableMeta.PlainView(inner.trim))))
+      if (!pinned(cat, name))
         sqlBound(spark, inner.trim, Map.empty).createOrReplaceTempView(unq(name))
       Some(status(spark, "OK"))
     case CreateTableAsRe(name, inner, castTail, ts) =>
@@ -3265,7 +3200,7 @@ object QuestSql {
           else d
         }
       df.createOrReplaceTempView(unq(name))
-      Option(ts).foreach(registerDesignatedTs(unq(name), _))
+      Option(ts).foreach(c => cat.update(unq(name))(_.copy(designatedTs = Some(c))))
       Some(status(spark, "OK"))
     case CreateTableAsBareRe(name, inner) =>
       sqlBound(spark, inner, Map.empty).createOrReplaceTempView(unq(name))
@@ -3286,19 +3221,16 @@ object QuestSql {
         val src = colsBody.trim.split("\\s+").last.replaceAll("[`']", "")
         val tpl = spark.table(src)
         tpl.limit(0).createOrReplaceTempView(unq(name))
-        designatedTsOf(unq(src)).foreach(registerDesignatedTs(unq(name), _))
-        Option(graft.Catalog.declaredCols.get(unq(src).toLowerCase)).foreach { cols =>
-          graft.Catalog.registerDeclaredCols(unq(name),
-            cols.toSeq.map { case (n, d) => (n, d.tpe, d.knobs) })
-        }
+        val srcTs = cat.designatedTs(unq(src))
+        val srcCols = cat.get(unq(src)).map(_.columns).getOrElse(Map.empty)
+        cat.update(unq(name))(m => m.copy(designatedTs = srcTs.orElse(m.designatedTs),
+          columns = if (srcCols.nonEmpty) srcCols else m.columns))
         graft.Catalog.invalidateMetaViews(spark)
         Some(status(spark, "OK"))
       }
       else {
         val colsF = parseColumnDefsFull(colsBody)
         val cols = colsF.map { case (n, t, _, _) => (n, t) }
-        graft.Catalog.registerDeclaredCols(unq(name),
-          colsF.map { case (n, _, d, k) => (n, d, k) })
         val sel = cols.map { case (n, t) => s"CAST(NULL AS $t) AS `$n`" }.mkString(", ")
         // declared TIMESTAMP_NS columns carry schema metadata so the
         // Catalyst ns rules and RefText can recognize the BIGINT nanos
@@ -3311,7 +3243,6 @@ object QuestSql {
           if (declared.startsWith("TIMESTAMP_NS")) d.withMetadata(n, nsMeta) else d
         }
         empty.createOrReplaceTempView(unq(name))
-        tsOpt.foreach(registerDesignatedTs(unq(name), _))
         // remember partition/TTL/WAL spelling for SHOW CREATE TABLE
         val partM = """(?is)\bPARTITION\s+BY\s+(\w+)""".r.findFirstMatchIn(tail)
         val ttlM = """(?is)\bTTL\s+(\d+)\s*([A-Za-z]+)""".r.findFirstMatchIn(tail)
@@ -3354,15 +3285,10 @@ object QuestSql {
           dedupKeysM.map(m2 =>
             s"\nDEDUP UPSERT KEYS(${m2.group(1).split(",").map(_.trim).mkString(",")})")
             .getOrElse("")
-        graft.Catalog.registerCreateTail(unq(name), tailStr)
-        dedupKeysM.foreach(m2 => graft.Catalog.registerDedupKeys(unq(name),
-          m2.group(1).split(",").map(k => unq(k.trim)).toSeq))
-        graft.Catalog.setCreateFormat(unq(name),
-          """(?is)\bFORMAT\s+PARQUET\b""".r.findFirstIn(tail).isDefined)
         val maxUnc = """(?is)maxUncommittedRows\s*=\s*(\d+)""".r
           .findFirstMatchIn(tail).map(_.group(1).toLong)
-        graft.Catalog.registerCreateMeta(unq(name), graft.Catalog.CreateMeta(
-          partM.map(_.group(1).toUpperCase),
+        cat.create(unq(name))(m => m.copy(
+          partitionBy = partM.map(_.group(1).toUpperCase),
           walEnabled = walSp == "WAL",
           dedup = """(?is)\bDEDUP\b""".r.findFirstIn(tail).isDefined,
           ttl = ttlM.map { m2 =>
@@ -3372,12 +3298,19 @@ object QuestSql {
             }
             (m2.group(1).toInt, u)
           },
-          maxUncommittedRows = maxUnc))
+          maxUncommittedRows = maxUnc,
+          createTail = Some(tailStr),
+          parquet = """(?is)\bFORMAT\s+PARQUET\b""".r.findFirstIn(tail).isDefined,
+          columns = colsF.map { case (n, _, d, k) => n.toLowerCase -> TableMeta.ColDecl(d, k) }.toMap,
+          dedupKeys = dedupKeysM.map(_.group(1).split(",").map(k => unq(k.trim)).toSeq)
+            .getOrElse(Nil),
+          designatedTs = tsOpt.orElse(m.designatedTs)))
         Some(status(spark, "OK"))
       }
     case InsertRe(name0, colList, body) =>
       val name = unq(name0)
       val target = spark.table(name0)
+      val meta = cat.get(name).getOrElse(TableMeta())
       val incoming0 =
         try sqlBound(spark, body, Map.empty)
         catch {
@@ -3435,9 +3368,7 @@ object QuestSql {
           import org.apache.spark.sql.types._
           def integral(t: DataType) =
             t == ByteType || t == ShortType || t == IntegerType || t == LongType
-          val declaredNsCol = Option(graft.Catalog.declaredCols.get(name.toLowerCase))
-            .exists(_.get(f.name.toLowerCase)
-              .exists(_.tpe.toUpperCase.startsWith("TIMESTAMP_NS")))
+          val declaredNsCol = meta.declares(f.name, "TIMESTAMP_NS")
           (f.dataType, srcType.get(f.name.toLowerCase)) match {
             // integer into TIMESTAMP is epoch-micros in the reference,
             // not epoch-seconds (WindowFunctionTest `insert values (1, …)`)
@@ -3488,11 +3419,8 @@ object QuestSql {
             // a longer geohash into a GEOHASH(p) column TRUNCATES to the
             // declared precision (reference GeoHashes.fromString prefix
             // cast; RecordToRowCopier geohash inserts)
-            case (StringType, Some(StringType)) if Option(graft.Catalog.declaredCols
-                .get(name.toLowerCase)).exists(_.get(f.name.toLowerCase)
-                  .exists(d => d.tpe.toUpperCase.startsWith("GEOHASH("))) =>
-              val decl = graft.Catalog.declaredCols.get(name.toLowerCase)(f.name.toLowerCase)
-                .tpe.toUpperCase
+            case (StringType, Some(StringType)) if meta.declares(f.name, "GEOHASH(") =>
+              val decl = meta.declaredType(f.name).get
               val chars = """GEOHASH\((\d+)([CB])\)""".r.findFirstMatchIn(decl) match {
                 case Some(mm) if mm.group(2) == "C" => Some(mm.group(1).toInt)
                 case Some(mm) if mm.group(1).toInt % 5 == 0 => Some(mm.group(1).toInt / 5)
@@ -3505,9 +3433,7 @@ object QuestSql {
             // a multi-char string LITERAL into a CHAR column is a
             // REJECTION (reference CastStrToChar; InsertCastTest 'cc' →
             // char); INSERT SELECT truncates to the first char
-            case (StringType, Some(StringType)) if Option(graft.Catalog.declaredCols
-                .get(name.toLowerCase)).exists(_.get(f.name.toLowerCase)
-                  .exists(_.tpe.toUpperCase == "CHAR")) =>
+            case (StringType, Some(StringType)) if meta.declaredType(f.name).contains("CHAR") =>
               if (isValuesIns) {
                 usedRejectGuard = true
                 when(length(c) > 1,
@@ -3517,16 +3443,12 @@ object QuestSql {
               } else substring(c, 1, 1).as(f.name)
             // '0.0.0.0' IS the IPv4 null (reference Numbers.IPV4_NULL =
             // 0) — land it as SQL NULL so it renders empty
-            case (StringType, _) if Option(graft.Catalog.declaredCols.get(name.toLowerCase))
-                .exists(_.get(f.name.toLowerCase)
-                  .exists(_.tpe.toUpperCase.startsWith("IPV4"))) =>
+            case (StringType, _) if meta.declares(f.name, "IPV4") =>
               nullif(c.cast(f.dataType), lit("0.0.0.0")).as(f.name)
             // LONG256 input normalizes to the canonical lowercase 0x
             // form whatever the spelling (0X…, bare hex —
             // SqlCompilerImplTest long256 inserts)
-            case (StringType, _) if Option(graft.Catalog.declaredCols.get(name.toLowerCase))
-                .exists(_.get(f.name.toLowerCase)
-                  .exists(_.tpe.toUpperCase.startsWith("LONG256"))) =>
+            case (StringType, _) if meta.declares(f.name, "LONG256") =>
               when(c.isNull, lit(null).cast(StringType))
                 .otherwise(concat(lit("0x"),
                   lower(regexp_replace(c.cast(StringType), "^(?i)0x", ""))))
@@ -3549,12 +3471,9 @@ object QuestSql {
       // symbol dictionary — symbolTableSize is O(1) metadata, reference
       // SymbolMapWriter). collect_set is bounded by the batch's symbol
       // cardinality, the same contract as the reference's symbol map.
-      val tsCol = designatedTsOf(name)
+      val tsCol = cat.designatedTs(name)
         .filter(c => incoming.columns.exists(_.equalsIgnoreCase(c)))
-      val symCols = target.columns.filter { c =>
-        Option(graft.Catalog.declaredCols.get(name.toLowerCase))
-          .exists(_.get(c.toLowerCase).exists(_.tpe.toUpperCase.startsWith("SYMBOL")))
-      }.toSeq
+      val symCols = target.columns.filter(meta.declares(_, "SYMBOL")).toSeq
       val baseAggs = tsCol match {
         case Some(c) =>
           // a BIGINT designated key is the ns carrier — ns→µs for the
@@ -3580,11 +3499,11 @@ object QuestSql {
         val off = baseAggs.length + i * 2
         val vals = Option(aggRow.getSeq[String](off)).getOrElse(Seq.empty)
         val sawNull = !aggRow.isNullAt(off + 1) && aggRow.getBoolean(off + 1)
-        if (vals.nonEmpty || sawNull) graft.Catalog.noteSymbolValues(name, c, vals, sawNull)
+        if (vals.nonEmpty || sawNull) graft.Catalog.noteSymbolValues(spark, name, c, vals, sawNull)
       }
       // WAL DEDUP UPSERT KEYS: the incoming batch replaces existing rows
       // on key collision (reference WAL dedup merge on commit)
-      val dk = graft.Catalog.dedupKeysOf(name)
+      val dk = meta.dedupKeys
         .filter(k => target.columns.exists(_.equalsIgnoreCase(k)))
       val base = if (dk.nonEmpty)
         target.join(broadcast(incoming.select(dk.map(col): _*).distinct()), dk, "left_anti")
@@ -3611,10 +3530,10 @@ object QuestSql {
       }
       // TTL eviction on commit (reference partition TTL): a partition is
       // dropped once its whole range is older than max(ts) - TTL
-      val stored = (Option(graft.Catalog.createMeta.get(name.toLowerCase)), tsCol) match {
-        case (Some(m), Some(c)) if m.ttl.isDefined && m.partitionBy.isDefined && mxTs != null =>
-          val (tn, tu) = m.ttl.get
-          val part = m.partitionBy.get.toUpperCase
+      val stored = tsCol match {
+        case Some(c) if meta.ttl.isDefined && meta.partitionBy.isDefined && mxTs != null =>
+          val (tn, tu) = meta.ttl.get
+          val part = meta.partitionBy.get.toUpperCase
           if (part == "NONE") stored0
           else stored0.where(
             expr(s"date_trunc('$part', `$c`) + INTERVAL 1 $part") >
@@ -3622,10 +3541,10 @@ object QuestSql {
         case _ => stored0
       }
       stored.createOrReplaceTempView(name)
-      graft.Catalog.bumpWalTxn(name, mnTs, mxTs, n)
+      graft.Catalog.bumpWalTxn(spark, name, mnTs, mxTs, n)
       if (mnTs != null && mxTs != null)
-        markMatViewsDirty(name, microsOfTs(mnTs), microsOfTs(mxTs) + 1)
-      else markMatViewsDirty(name, FullRange._1, FullRange._2)
+        markMatViewsDirty(cat, name, microsOfTs(mnTs), microsOfTs(mxTs) + 1)
+      else markMatViewsDirty(cat, name, FullRange._1, FullRange._2)
       import spark.implicits._
       Some(Seq(n).toDF("rows_inserted"))
     case DropRe(name) =>
@@ -3635,35 +3554,29 @@ object QuestSql {
       // tables() stops listing it — because the snapshot already
       // hard-linked the data (the reference's queued WAL op deregisters
       // the token up front the same way)
-      if (graft.ops.Checkpoint.active) {
-        val wal = Option(graft.Catalog.createMeta.get(unq(name).toLowerCase)).exists(_.walEnabled)
-        if (!wal) throw new IllegalStateException(
+      if (graft.ops.Checkpoint.active && !cat.get(unq(name)).exists(_.walEnabled))
+        throw new IllegalStateException(
           s"could not lock '${unq(name)}~' [reason='checkpointInProgress']")
-      }
-      dropAndUnregister(spark, unq(name))
+      spark.catalog.dropTempView(unq(name))
+      cat.remove(unq(name))
       Some(status(spark, "OK"))
     case RenameRe(from, to) =>
-      if (graft.ops.Checkpoint.active) {
-        val wal = Option(graft.Catalog.createMeta.get(unq(from).toLowerCase)).exists(_.walEnabled)
-        if (!wal) throw new IllegalStateException(
+      if (graft.ops.Checkpoint.active && !cat.get(unq(from)).exists(_.walEnabled))
+        throw new IllegalStateException(
           s"could not lock '${unq(from)}~' [reason='checkpointInProgress']")
-      }
       spark.table(from).createOrReplaceTempView(unq(to))
-      Option(tsRegistry.get(unq(from).toLowerCase)).foreach(registerDesignatedTs(unq(to), _))
-      Option(graft.Catalog.createMeta.get(unq(from).toLowerCase))
-        .foreach(m => graft.Catalog.registerCreateMeta(unq(to), m))
-      graft.Catalog.renameSymbolDicts(unq(from), unq(to))
-      graft.Catalog.migrateTableRegistries(unq(from), unq(to))
       spark.catalog.dropTempView(unq(from))
-      graft.Catalog.unregisterTable(unq(from))
+      // reference TableNameRegistry rename: the table keeps its record
+      // (id, declared columns, WAL state, txn log, formats), only the
+      // name changes
+      cat.rename(unq(from), unq(to))
       Some(status(spark, "OK"))
     case TruncateRe(name) =>
       spark.table(name).limit(0).createOrReplaceTempView(unq(name))
       // truncate resets the symbol maps AND the write stats the txn log
       // feeds into tables()' ts bounds (reference TableWriter.truncate)
-      graft.Catalog.clearSymbolDicts(unq(name))
-      graft.Catalog.clearWalTxnLog(unq(name))
-      markMatViewsDirty(unq(name), FullRange._1, FullRange._2)
+      cat.update(unq(name))(_.copy(symbols = Map.empty, txnLog = Vector.empty))
+      markMatViewsDirty(cat, unq(name), FullRange._1, FullRange._2)
       Some(status(spark, "OK"))
     case CopyFromRe(name, path, header) =>
       val df = spark.read
@@ -3675,11 +3588,8 @@ object QuestSql {
       import spark.implicits._
       // import replaces the table — rebuild the symbol dictionary from
       // the imported batch in the same pass that counts rows
-      graft.Catalog.clearSymbolDicts(unq(name))
-      val copySymCols = df.columns.filter { c =>
-        Option(graft.Catalog.declaredCols.get(unq(name).toLowerCase))
-          .exists(_.get(c.toLowerCase).exists(_.tpe.toUpperCase.startsWith("SYMBOL")))
-      }.toSeq
+      val meta = cat.update(unq(name))(_.copy(symbols = Map.empty))
+      val copySymCols = df.columns.filter(meta.declares(_, "SYMBOL")).toSeq
       val copyAggs = count(lit(1)) +: copySymCols.flatMap(c =>
         Seq(collect_set(col(c).cast("string")), max(col(c).isNull)))
       val copyRow = df.agg(copyAggs.head, copyAggs.tail: _*).collect()(0)
@@ -3687,7 +3597,7 @@ object QuestSql {
         val off = 1 + i * 2
         val vals = Option(copyRow.getSeq[String](off)).getOrElse(Seq.empty)
         val sawNull = !copyRow.isNullAt(off + 1) && copyRow.getBoolean(off + 1)
-        if (vals.nonEmpty || sawNull) graft.Catalog.noteSymbolValues(unq(name), c, vals, sawNull)
+        if (vals.nonEmpty || sawNull) graft.Catalog.noteSymbolValues(spark, unq(name), c, vals, sawNull)
       }
       Some(Seq(copyRow.getLong(0)).toDF("rows_imported"))
     case CopyToRe(sub, table, path, fmt) =>
@@ -3853,7 +3763,7 @@ object QuestSql {
   /** `avg(x, scale)` [OVER (...)] → `CAST(avg(x) [OVER (...)] AS
     * DECIMAL(38, scale))` with the OVER clause balanced-scanned so
     * nested frame expressions survive. */
-  private def rewriteAvgScale(q0: String): String = {
+  private def rewriteAvgScale(cat: SessionCatalog, q0: String): String = {
     // avg(x, scale) and avg over a DECLARED decimal column keep the
     // asked/declared scale in the reference (AvgDecimalRescale /
     // AvgDecimalGroupByFunction round HALF_UP); Spark widens to
@@ -3862,12 +3772,11 @@ object QuestSql {
     // sentinel so the pass cannot re-enter its own output.
     def declaredScale(col0: String): Option[Int] = {
       val c = col0.split('.').last.toLowerCase
-      import scala.jdk.CollectionConverters._
       // only consult tables the statement actually references — a
       // DECIMAL column of the same name declared in an unrelated table
       // must not rescale avg() over some other table's DOUBLE column
       val qLower = q0.toLowerCase
-      graft.Catalog.declaredCols.asScala.collectFirst {
+      cat.declared.collectFirst {
         case (tbl, cols) if refTable(qLower, tbl) && cols.get(c).exists(
             _.tpe.toUpperCase.startsWith("DECIMAL")) =>
           val d = cols(c)
@@ -3882,9 +3791,8 @@ object QuestSql {
     // unrelated session table must not reroute this query's avg().
     def declaredIntDigits(col0: String): Int = {
       val c = col0.split('.').last.toLowerCase
-      import scala.jdk.CollectionConverters._
       val qLower = q0.toLowerCase
-      graft.Catalog.declaredCols.asScala.collectFirst {
+      cat.declared.collectFirst {
         case (tbl, cols) if refTable(qLower, tbl) &&
             cols.get(c).exists(_.tpe.toUpperCase.startsWith("DECIMAL")) =>
           """\(\s*(\d+)\s*,\s*(\d+)\s*\)""".r.findFirstMatchIn(cols(c).tpe)
@@ -3893,9 +3801,8 @@ object QuestSql {
     }
     def declaredPrecision(col0: String): Option[Int] = {
       val c = col0.split('.').last.toLowerCase
-      import scala.jdk.CollectionConverters._
       val qLower = q0.toLowerCase
-      graft.Catalog.declaredCols.asScala.collectFirst {
+      cat.declared.collectFirst {
         case (tbl, cols) if refTable(qLower, tbl) &&
             cols.get(c).exists(_.tpe.toUpperCase.startsWith("DECIMAL")) =>
           """\(\s*(\d+)""".r.findFirstMatchIn(cols(c).tpe)
@@ -3993,11 +3900,11 @@ object QuestSql {
     * accumulation via the registered long256_bin_sum UDAF, rendered back
     * to the canonical 0x carrier (reference
     * `groupby/SumLong256GroupByFunction`; SampleByFillPrevTest sums). */
-  private def rewriteLong256Sum(q0: String, aliasHints: Set[String] = Set.empty): String = {
+  private def rewriteLong256Sum(cat: SessionCatalog, q0: String,
+                                aliasHints: Set[String] = Set.empty): String = {
     if (!"""(?i)\bsum\s*\(""".r.findFirstIn(q0).isDefined) return q0
-    import scala.jdk.CollectionConverters._
     val qLower256 = q0.toLowerCase
-    val l256Cols: Set[String] = graft.Catalog.declaredCols.asScala.collect {
+    val l256Cols: Set[String] = cat.declared.collect {
       case (tbl, cols) if refTable(qLower256, tbl) =>
         cols.collect { case (n, d) if d.tpe.toUpperCase.startsWith("LONG256") => n }
     }.flatten.toSet ++ aliasHints
@@ -4120,12 +4027,11 @@ object QuestSql {
     sb.toString
   }
 
-  private def rewriteDecimalWideSum(q0: String): String = {
+  private def rewriteDecimalWideSum(cat: SessionCatalog, q0: String): String = {
     if (!"""(?i)\b(sum|min|max)\s*\(""".r.findFirstIn(q0).isDefined) return q0
-    import scala.jdk.CollectionConverters._
     val decP = """(?i)^DECIMAL\s*\(\s*(\d+)""".r
     val qLowerDW = q0.toLowerCase
-    def colsAbove(bound: Int): Set[String] = graft.Catalog.declaredCols.asScala.collect {
+    def colsAbove(bound: Int): Set[String] = cat.declared.collect {
       case (tbl, cols) if refTable(qLowerDW, tbl) =>
         cols.collect { case (n, d)
           if decP.findFirstMatchIn(d.tpe).exists(_.group(1).toInt >= bound) => n }
@@ -4152,7 +4058,7 @@ object QuestSql {
     sb.toString
   }
 
-  private def rewriteWindowSum(q0: String): String = {
+  private def rewriteWindowSum(cat: SessionCatalog, q0: String): String = {
     val pat = java.util.regex.Pattern.compile("(?is)\\bsum\\s*\\(")
     var q = q0
     var from = 0
@@ -4179,8 +4085,7 @@ object QuestSql {
       // trips Spark's window extraction (_w0 MISSING_ATTRIBUTES)
       val declaredDecimal = args.trim.matches("[\\w.]+") && {
         val n = args.trim.split('.').last.toLowerCase
-        import scala.jdk.CollectionConverters._
-        graft.Catalog.declaredCols.asScala.exists { case (tbl, cols) =>
+        cat.declared.exists { case (tbl, cols) =>
           refTable(q0.toLowerCase, tbl) &&
             cols.get(n).exists(_.tpe.toUpperCase.startsWith("DECIMAL"))
         }
@@ -4610,7 +4515,7 @@ object QuestSql {
     q
   }
 
-  private[sql] def rewriteFnMacros(q0: String): String = {
+  private[sql] def rewriteFnMacros(cat: SessionCatalog, q0: String): String = {
     // long256 alias capture FIRST: the cast expansion below erases the
     // `AS LONG256` spelling before rewriteLong256Sum runs
     val l256Aliases: Set[String] =
@@ -5042,10 +4947,10 @@ object QuestSql {
     // which is exactly Spark's decimal(38,scale) cast. The OVER clause
     // (window variant) must stay inside the cast — balanced scan, since
     // a rewritten RANGE frame nests parens arbitrarily deep.
-    q = rewriteAvgScale(q)
-    q = rewriteWindowSum(q)
-    q = rewriteLong256Sum(q, l256Aliases)
-    q = rewriteDecimalWideSum(q)
+    q = rewriteAvgScale(cat, q)
+    q = rewriteWindowSum(cat, q)
+    q = rewriteLong256Sum(cat, q, l256Aliases)
+    q = rewriteDecimalWideSum(cat, q)
     q = pinScanOrderForSeqAggs(q)
     q = rewriteCorr(q)
     q = rewriteRegrFinite(q)
@@ -5142,8 +5047,8 @@ object QuestSql {
     // cumulative size covers target prices the fill; shortfall → NaN
     q = expandCalls(q, "l2price") {
       case Seq(target, sizes, prices)
-          if declaredArrayDims(q, sizes).isDefined ||
-            declaredArrayDims(q, prices).isDefined ||
+          if declaredArrayDims(cat, q, sizes).isDefined ||
+            declaredArrayDims(cat, q, prices).isDefined ||
             sizes.trim.matches("(?is)^(element_at|slice|try_element_at)\\(.*") ||
             prices.trim.matches("(?is)^(element_at|slice|try_element_at)\\(.*") =>
         // array book form (reference l2price(D, D[], D[])): sweep the
@@ -5188,7 +5093,7 @@ object QuestSql {
       // rank dispatch is static in Spark: a declared 1-D column
       // transposes to itself (reference transpose on a vector is
       // identity); anything else takes the 2-D path
-      if (declaredArrayDims(q, m0).contains(1)) s"($m0)"
+      if (declaredArrayDims(cat, q, m0).contains(1)) s"($m0)"
       else {
         // seqTo(n): [1..n], empty when n ≤ 0 (size of an empty/null row
         // is 0/-1 — a plain sequence(1, 0) would step DOWN to [1, 0])
@@ -5244,10 +5149,10 @@ object QuestSql {
         val subscriptedArray = bare.contains("try_element_at") && {
           val subs = "try_element_at\\s*\\(".r.findAllIn(bare).size
           val dims = "[A-Za-z_][\\w.]*".r.findAllIn(bare)
-            .flatMap(t => declaredArrayDims(q, t)).maxOption.getOrElse(0)
+            .flatMap(t => declaredArrayDims(cat, q, t)).maxOption.getOrElse(0)
           dims - subs >= 1
         }
-        val isArrayCol = declaredArrayDims(q, bare).exists(_ > 0) ||
+        val isArrayCol = declaredArrayDims(cat, q, bare).exists(_ > 0) ||
           isArrayExpr || aliasArray || subscriptedArray
         if (isArrayCol)
           s"IF(size(__graft_flat(__ARRAGG__($x))) = 0, NULL, __graft_flat(__ARRAGG__($x)))"
@@ -5258,7 +5163,7 @@ object QuestSql {
           // carrier (bare nulls would be dropped by the aggregate), and
           // integral inputs ride the DOUBLE factory
           val strCol = bare.matches("[\\w.]+") && {
-            val ts = graft.Catalog.declaredTypesOf(bare.split('.').last.toLowerCase)
+            val ts = cat.declaredTypesOf(bare.split('.').last.toLowerCase)
             ts.nonEmpty && ts.forall(t => t.startsWith("STRING") || t.startsWith("VARCHAR") ||
               t.startsWith("SYMBOL") || t.startsWith("CHAR") || t.startsWith("UUID"))
           }
@@ -5387,7 +5292,7 @@ object QuestSql {
       // column, whose BIGINT carrier is NANOS; a null endpoint nulls
       // the interval
       def ep(a: String) =
-        if (declaredNsCol(q.toLowerCase, a.trim) ||
+        if (declaredNsCol(cat, q.toLowerCase, a.trim) ||
             """(?i)__ns_cast\s*\(|__ns_at_tz\s*\(|::\s*timestamp_ns\b|to_timestamp_ns\s*\("""
               .r.findFirstIn(a).isDefined)
           s"timestamp_micros(CAST(($a) DIV 1000 AS BIGINT))"
@@ -5750,7 +5655,7 @@ object QuestSql {
     def argDims(a: String): Int = {
       val subs = "try_element_at\\s*\\(".r.findAllIn(a).size
       val colDims = "[A-Za-z_][\\w.]*".r.findAllIn(a)
-        .flatMap(t => declaredArrayDims(q, t)).maxOption.getOrElse(0)
+        .flatMap(t => declaredArrayDims(cat, q, t)).maxOption.getOrElse(0)
       val litDims =
         if ("""(?i)array\s*\(\s*array\s*\(""".r.findFirstIn(a).isDefined) 2
         else if ("""(?i)\barray\s*\(""".r.findFirstIn(a).isDefined) 1 else 0
@@ -6561,7 +6466,7 @@ object QuestSql {
       val df = fn match {
         case "table_columns" => graft.Catalog.tableColumns(spark, t)
         case "files" => graft.Catalog.files(spark, t)
-        case "table_partitions" => graft.Tables.registeredPath(t) match {
+        case "table_partitions" => SessionCatalog(spark).pathOf(t) match {
           case Some(p) if new java.io.File(p).isDirectory =>
             graft.Catalog.tablePartitions(spark, p)
           case _ => graft.Catalog.tablePartitionsFull(spark, t)
@@ -6570,7 +6475,7 @@ object QuestSql {
           // arg is a table name (reference WalTransactionsFunctionFactory
           // signature `wal_transactions(s)`); a raw directory also works
           graft.Catalog.walTransactions(spark,
-            graft.Tables.registeredPath(t).getOrElse(t))
+            SessionCatalog(spark).pathOf(t).getOrElse(t))
       }
       val view = s"__graft_fn_${fn}_${t.replaceAll("\\W", "_")}"
       df.createOrReplaceTempView(view)
@@ -6594,7 +6499,7 @@ object QuestSql {
       case ShowColsRe(t) => Some(graft.Catalog.showColumns(spark, t))
       case ShowCreateRe(t) => Some(graft.Catalog.showCreateTable(spark, t))
       case ShowPartsRe(t) =>
-        val path = graft.Tables.registeredPath(t.split('.').last)
+        val path = SessionCatalog(spark).pathOf(t)
         Some(path match {
           case Some(p) if new java.io.File(p).isDirectory =>
             graft.Catalog.tablePartitions(spark, p)
@@ -6631,16 +6536,16 @@ object QuestSql {
   /** Pure string-level rewrites (interval literals, LATEST ON,
     * SAMPLE BY without FILL, negative/range LIMIT).
     */
-  def rewrite(query: String): String = {
+  def rewrite(query: String, cat: SessionCatalog): String = {
     var q = rewriteIntervalLiterals(
       normalizeSampleByStride(query.trim.stripSuffix(";")))
-    q = rewriteFnMacros(q)
+    q = rewriteFnMacros(cat, q)
     q = rewriteWindowInAgg(q)
-    q = rewriteLatestByDeprecated(q)
+    q = rewriteLatestByDeprecated(cat, q)
     q = rewriteLatestOn(q)
-    q = rewriteSampleBy(q)
-    q = rewriteNestedSampleBy(q)
-    q = rewriteNegativeLimit(q)
+    q = rewriteSampleBy(cat, q)
+    q = rewriteNestedSampleBy(cat, q)
+    q = rewriteNegativeLimit(cat, q)
     q = rewriteRangeLimit(q)
     q
   }
@@ -6866,7 +6771,7 @@ object QuestSql {
     * follows FROM directly, keys partition, designated ts orders, and —
     * unlike LATEST ON — the WHERE clause applies AFTER the latest
     * selection. */
-  private def rewriteLatestByDeprecated(q: String): String = {
+  private def rewriteLatestByDeprecated(cat: SessionCatalog, q: String): String = {
     val t = q.trim
     if (!t.toLowerCase.startsWith("select")) return q
     val at = topLevelIndexOf(t, Seq("latest by"))
@@ -6881,9 +6786,9 @@ object QuestSql {
     if (fromAt < 0) return q
     val relHead = """[`']?([\w.]+)""".r
       .findFirstMatchIn(head.substring(fromAt + 4).trim)
-      .map(_.group(1).split('.').last.toLowerCase).getOrElse("")
-    val ts = Option(tsRegistry.get(relHead))
-      .orElse(Option(fallbackTsRegistry.get(relHead))).getOrElse("ts")
+      .map(_.group(1)).getOrElse("")
+    val ts = cat.designatedTs(relHead)
+      .orElse(cat.get(relHead).flatMap(_.fallbackTs)).getOrElse("ts")
     s"SELECT * FROM ($head LATEST ON $ts PARTITION BY $keys)$tail"
   }
 
@@ -7015,7 +6920,7 @@ object QuestSql {
         // (SampleByNanoTimestampTest:3090)
         if ("(?i)timestamp_ns\\b|timestamp_sequence_ns|__ns_cast".r.findFirstIn(inner).isDefined) {
           val synth = s"__graft_rel_${subqueryCounter.incrementAndGet()}"
-          registerCtasNsCols(synth, inner)
+          registerCtasNsCols(SessionCatalog(spark), synth, inner)
           (d, synth)
         } else (d, "")
       }
@@ -7202,7 +7107,7 @@ object QuestSql {
     * fill spine spans only the surviving data). Predicates touching the
     * designated ts or aggregate outputs stay outside (they filter
     * bucket labels, SampleByNanoTimestampTest first-obs cases). */
-  private def pushFilterIntoSampleBy(q: String): String = {
+  private def pushFilterIntoSampleBy(cat: SessionCatalog, q: String): String = {
     val m = """(?is)^\s*select\s+\*\s+from\s*\(""".r.findFirstMatchIn(q).getOrElse(return q)
     var i = m.end - 1; var depth = 0; var close = -1
     while (i < q.length && close < 0) {
@@ -7236,7 +7141,7 @@ object QuestSql {
     val items = splitSelect(inner.substring(selAt + 6, fromAt)).map(_.trim)
     val bare = items.filter(_.matches("[A-Za-z_]\\w*")).map(_.toLowerCase).toSet
     val fromTbl = """(?is)\bfrom\s+([\w.]+)""".r.findFirstMatchIn(inner).map(_.group(1))
-    val tsName = fromTbl.flatMap(t => designatedTsOf(t.split('.').last.toLowerCase))
+    val tsName = fromTbl.flatMap(cat.designatedTs)
       .map(_.toLowerCase)
     val kw = Set("and", "or", "not", "in", "is", "null", "true", "false",
       "between", "like", "ilike", "cast", "as")
@@ -7263,12 +7168,15 @@ object QuestSql {
     * rnd_ipv4, netmask) register the alias as a declared IPV4 column so
     * later queries engage the ipv4 operator rewrites (IPv4Test
     * `create table test as (select rnd_int(...)::ipv4 ip ...)`). */
-  private[sql] def preRegisterCtasIpv4(q: String): Unit = {
+  private[sql] def preRegisterCtasIpv4(cat: SessionCatalog, q: String): Unit = {
     if ("""(?i)__ipv4_cast\s*\(|\brnd_ipv4\b|\bnetmask\s*\(|\btimestamp_sequence\s*\(|\brnd_long256\b|\bto_long256\s*\(|::\s*long256\b|\bas\s+long256\b|decimal\s*\(|chr\(CAST\(|::\s*char\b|\brnd_char\s*\(""".r
         .findFirstIn(q).isEmpty) return
     val head = """(?is)^\s*CREATE\s+(?:ATOMIC\s+|BATCH\s+\d+\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([`"']?[\w.]+[`"']?)\s+AS\s*\(""".r
     head.findFirstMatchIn(q).foreach { m =>
       val inner0 = q.substring(m.end).trim
+      val tbl = unq(m.group(1))
+      def declare(col: String, tpe: String): Unit =
+        cat.update(tbl)(_.withColumnIfAbsent(col, tpe))
       if (inner0.toLowerCase.startsWith("select")) {
         // select list ends at the top-level FROM
         val fromAt = topLevelIndexOf(inner0, Seq("from"))
@@ -7277,10 +7185,7 @@ object QuestSql {
           if ("""(?i)__ipv4_cast\s*\(|\brnd_ipv4\b|\bnetmask\s*\(""".r.findFirstIn(item).isDefined) {
             """(?is)^(.*\S)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r.findFirstMatchIn(item.trim)
               .filter(mm => mm.group(1).contains("("))
-              .foreach { mm =>
-                graft.Catalog.mergeDeclaredCol(
-                  unq(m.group(1)).split('.').last, mm.group(2), "IPV4")
-              }
+              .foreach(mm => declare(mm.group(2), "IPV4"))
           }
           // char-cast items (`(x-1)::char ch` — by now expanded to the
           // chr(CAST…) CASE) declare CHAR, so the ''≡null-char list
@@ -7288,18 +7193,14 @@ object QuestSql {
           if ("""(?i)chr\(CAST\(|::\s*char\b|\brnd_char\s*\(""".r.findFirstIn(item).isDefined) {
             """(?is)^(.*\S)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r.findFirstMatchIn(item.trim)
               .filter(mm => mm.group(1).contains("(") || mm.group(1).contains("::"))
-              .foreach { mm =>
-                graft.Catalog.mergeDeclaredCol(
-                  unq(m.group(1)).split('.').last, mm.group(2), "CHAR")
-              }
+              .foreach(mm => declare(mm.group(2), "CHAR"))
           }
           if ("""(?i)\btimestamp_sequence\s*\(""".r.findFirstIn(item).isDefined) {
             """(?is)^(.*\S)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r.findFirstMatchIn(item.trim)
               .filter(mm => mm.group(1).contains("("))
               .foreach { mm =>
-                val tbl = unq(m.group(1)).split('.').last.toLowerCase
-                if (!tsRegistry.containsKey(tbl))
-                  fallbackTsRegistry.put(tbl, mm.group(2))
+                cat.update(tbl)(t =>
+                  if (t.designatedTs.isDefined) t else t.copy(fallbackTs = Some(mm.group(2))))
               }
           }
           // decimal items keep their precision/scale through CTAS so
@@ -7315,8 +7216,7 @@ object QuestSql {
               """(?is)^(.*\S)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r
                 .findFirstMatchIn(item.trim)
                 .filter(mm => mm.group(1).contains("("))
-                .foreach(mm => graft.Catalog.mergeDeclaredCol(
-                  unq(m.group(1)).split('.').last, mm.group(2), s"DECIMAL($p,$sc)"))
+                .foreach(mm => declare(mm.group(2), s"DECIMAL($p,$sc)"))
             }
           }
           // long256-yielding items keep their type through CTAS so
@@ -7326,17 +7226,14 @@ object QuestSql {
               .findFirstIn(item).isDefined) {
             """(?is)^(.*\S)\s+(?:AS\s+)?`?([A-Za-z_]\w*)`?\s*$""".r.findFirstMatchIn(item.trim)
               .filterNot(mm => mm.group(2).equalsIgnoreCase("long256"))
-              .foreach { mm =>
-                graft.Catalog.mergeDeclaredCol(
-                  unq(m.group(1)).split('.').last, mm.group(2), "LONG256")
-              }
+              .foreach(mm => declare(mm.group(2), "LONG256"))
           }
         }
       }
     }
   }
 
-  private[sql] def preRegisterCtasNs(q: String): Unit = {
+  private[sql] def preRegisterCtasNs(cat: SessionCatalog, q: String): Unit = {
     val head = """(?is)^\s*CREATE\s+(?:ATOMIC\s+|BATCH\s+\d+\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([`"']?[\w.]+[`"']?)\s+AS\s*\(""".r
     head.findFirstMatchIn(q).foreach { m =>
       // balanced inner text from the matched '('
@@ -7354,12 +7251,11 @@ object QuestSql {
         i += 1
       }
       if (close > 0)
-        registerCtasNsCols(unq(m.group(1)).split('.').last,
-          q.substring(m.end, close))
+        registerCtasNsCols(cat, unq(m.group(1)), q.substring(m.end, close))
     }
   }
 
-  private def registerCtasNsCols(name: String, inner0: String): Unit = {
+  private def registerCtasNsCols(cat: SessionCatalog, name: String, inner0: String): Unit = {
     val marks = "(?i)timestamp_ns\\b|timestamp_sequence_ns|__ns_cast".r
     if (marks.findFirstIn(inner0).isEmpty) return
     val inner = inner0.trim.stripPrefix("(").trim
@@ -7388,8 +7284,8 @@ object QuestSql {
       .flatMap(it => AutoAlias.explicitAliasOf(it))
       .map(_.toLowerCase)
     if (nsNames.nonEmpty)
-      graft.Catalog.registerDeclaredCols(name,
-        nsNames.map(n => (n, "TIMESTAMP_NS", "")))
+      cat.update(name)(_.copy(columns =
+        nsNames.map(_ -> TableMeta.ColDecl("TIMESTAMP_NS", "")).toMap))
   }
 
   private[sql] def splitSelect(sel: String): Seq[String] = {
@@ -7530,7 +7426,7 @@ object QuestSql {
     Some((sel, rel, where, n, unit, tail))
   }
 
-  private def rewriteSampleBy(q0: String): String = (q0 match {
+  private def rewriteSampleBy(cat: SessionCatalog, q0: String): String = (q0 match {
     case SampleByRe(sel, table, where, n, unit, tail) =>
       Some((sel, table, where, n, unit, tail))
     case other => sampleByPieces(other).orElse(sampleBySplit(other))
@@ -7556,8 +7452,8 @@ object QuestSql {
         else {
           // first table token of the relation (strip backticks/quotes)
           val headTbl = """[`']?([\w.]+)""".r.findFirstMatchIn(table.trim)
-            .map(_.group(1).split('.').last.toLowerCase).getOrElse("")
-          Option(tsRegistry.get(headTbl)).orElse(conventional).getOrElse("ts")
+            .map(_.group(1)).getOrElse("")
+          cat.designatedTs(headTbl).orElse(conventional).getOrElse("ts")
         }
       }
       val tsItem = items.find(i => isBare(i) && (i == tsName || i.endsWith(s".$tsName")))
@@ -7677,13 +7573,12 @@ object QuestSql {
     * declared-column registry of tables the statement references (the
     * same scoping as rewriteAvgScale). None for expressions, unknown
     * columns, or non-array declarations. */
-  private def declaredArrayDims(q: String, col0: String): Option[Int] = {
+  private def declaredArrayDims(cat: SessionCatalog, q: String, col0: String): Option[Int] = {
     val c = col0.trim
     if (!c.matches("[\\w.]+")) return None
     val name = c.split('.').last.toLowerCase
     val qLower = q.toLowerCase
-    import scala.jdk.CollectionConverters._
-    graft.Catalog.declaredCols.asScala.collectFirst {
+    cat.declared.collectFirst {
       case (tbl, cols) if qLower.contains(tbl) && cols.contains(name) &&
           cols(name).tpe.endsWith("[]") =>
         cols(name).tpe.sliding(2).count(_ == "[]")
@@ -7712,7 +7607,7 @@ object QuestSql {
   /** Apply the plain SAMPLE BY → GROUP BY lowering to parenthesized
     * subqueries too (reference allows SAMPLE BY at any nesting —
     * `select * from (select ... sample by 1m)`). */
-  private def rewriteNestedSampleBy(q: String): String = {
+  private def rewriteNestedSampleBy(cat: SessionCatalog, q: String): String = {
     if (!"""(?i)\b(SAMPLE\s+BY|LATEST\s+(?:ON|BY))\b|LIMIT\s+-\d|LIMIT\s+\d+\s*,""".r
         .findFirstIn(q).isDefined) return q
     val sb = new StringBuilder
@@ -7750,11 +7645,11 @@ object QuestSql {
             // LATEST ON first (its result may still hold a SAMPLE BY
             // tail); a set operation in the region rewrites per-operand
             // — the whole-query regexes would mis-anchor across the UNION
-            val step = mapSetOperands(inner.trim)(op => rewriteRangeLimit(rewriteNegativeLimit(
-              rewriteSampleBy(rewriteLatestOn(rewriteLatestByDeprecated(op.trim))))))
+            val step = mapSetOperands(inner.trim)(op => rewriteRangeLimit(rewriteNegativeLimit(cat,
+              rewriteSampleBy(cat, rewriteLatestOn(rewriteLatestByDeprecated(cat, op.trim))))))
             val rewritten =
-              if (step == inner.trim) rewriteNestedSampleBy(inner)
-              else rewriteNestedSampleBy(step)
+              if (step == inner.trim) rewriteNestedSampleBy(cat, inner)
+              else rewriteNestedSampleBy(cat, step)
             sb.append('(').append(rewritten).append(')')
           }
         } else sb.append(q.substring(i, j))
@@ -8756,7 +8651,7 @@ object QuestSql {
   private val NegLimitSelRe =
     """(?is)^SELECT\s+(.*?)\s+FROM\s+(.*?)\s+ORDER\s+BY\s+([\w.,\s]+?)\s+LIMIT\s+-(\d+)\s*$""".r
 
-  private def rewriteNegativeLimit(q: String): String = q match {
+  private def rewriteNegativeLimit(cat: SessionCatalog, q: String): String = q match {
     case NegLimitSelRe(sel, rest, orderCols, n) if sel.trim != "*" &&
         !"""(?i)\bselect\b""".r.findFirstIn(rest).isDefined =>
       // keep the order key available for the tail slice even when the
@@ -8796,7 +8691,7 @@ object QuestSql {
       // items (`t2.k x`) keep resolving
       val relAlias =
         if (table.matches("[\\w.]+")) " " + table.split('.').last else ""
-      val tsOpt = Option(tsRegistry.get(table.split('.').last.toLowerCase))
+      val tsOpt = cat.designatedTs(table)
       if (sel.trim.toUpperCase.startsWith("DISTINCT")) {
         // DISTINCT … LIMIT -n: the reference emits distinct rows in
         // FIRST-APPEARANCE order, then slices the tail

@@ -44,9 +44,10 @@ object RefText {
     // declared in some table as a plain string type (and nowhere as
     // LONG256) keeps its text verbatim even when a value happens to
     // look like the 66-char canonical carrier
+    val cat = graft.SessionCatalog(df.sparkSession)
     val keep = schema.fields.map { f =>
       val n = f.name.toLowerCase
-      val decls = graft.Catalog.declaredTypesOf(n)
+      val decls = cat.declaredTypesOf(n)
       decls.nonEmpty && !decls.exists(_.startsWith("LONG256")) &&
         decls.forall(t => t.startsWith("STRING") || t.startsWith("VARCHAR") ||
           t.startsWith("SYMBOL") || t.startsWith("CHAR"))

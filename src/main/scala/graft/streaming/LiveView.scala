@@ -80,7 +80,8 @@ object LiveView {
             tableDir: String, checkpoint: String,
             tsCol: String, dedupKeys: Seq[String]): (LiveView, StreamingQuery) = {
     val lv = new LiveView(spark, name, tableDir, tsCol)
-    graft.Catalog.registerLiveView(name, tableDir, () => lv.seamMicros)
+    graft.SessionCatalog(spark).update(name)(
+      _.copy(view = Some(graft.TableMeta.LiveView(tableDir, () => lv.seamMicros))))
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: DataFrame, id: Long) => lv.onBatch(b, id, dedupKeys) }

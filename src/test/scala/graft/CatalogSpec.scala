@@ -190,6 +190,36 @@ class CatalogSpec extends SparkSpec {
     assert(engine.sql("SELECT pg_get_partkeydef(1259) AS d").head().isNullAt(0))
   }
 
+  test("pg_proc lists exactly the session's public function names, current database included") {
+    engine.sql("SELECT 1 AS x") // the dialect registers its function library
+    def check(): Unit = {
+      val procs = Catalog.pgProc(spark).collect().map(_.getString(1)).toSet
+      val public = spark.catalog.listFunctions().collect().map(_.name)
+        .filterNot(_.startsWith("__")).toSet
+      assert(procs == public, s"only in pg_proc: ${procs -- public}; only public: ${public -- procs}")
+    }
+    check()
+    spark.sql("CREATE DATABASE IF NOT EXISTS proc_db")
+    try {
+      spark.catalog.setCurrentDatabase("proc_db")
+      spark.sql("CREATE FUNCTION proc_probe(x INT) RETURNS INT RETURN x + 1")
+      check()
+      assert(Catalog.pgProc(spark).collect().exists(_.getString(1) == "proc_probe"))
+    } finally {
+      spark.catalog.setCurrentDatabase("default")
+      spark.sql("DROP DATABASE proc_db CASCADE")
+    }
+  }
+
+  test("a dropped static pg_catalog view is rebuilt by the next pg_catalog query") {
+    assert(engine.sql("SELECT * FROM pg_catalog.pg_roles").count() == 0)
+    spark.sql("DROP VIEW pg_catalog.pg_roles")
+    assert(!spark.catalog.tableExists("pg_catalog.pg_roles"))
+    assert(engine.sql("SELECT oid FROM pg_catalog.pg_type WHERE typname = 'int'").count() == 1)
+    assert(spark.catalog.tableExists("pg_catalog.pg_roles"))
+    assert(engine.sql("SELECT rolname FROM pg_catalog.pg_roles").count() == 0)
+  }
+
   test("pg_catalog long tail: discovery relations empty with reference schemas") {
     // the relations JDBC metadata discovery and psql tab-completion probe
     for ((t, probe) <- Seq(

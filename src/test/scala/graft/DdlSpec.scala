@@ -66,6 +66,94 @@ class DdlSpec extends SparkSpec {
     assert(intercept[Exception](spark.table("r2_t")) != null)
   }
 
+  private def designatedTsInTables(t: String): Option[String] =
+    engine.sql("SELECT table_name, designatedTimestamp FROM tables()").collect()
+      .find(_.getString(0) == t).map(_.getString(1))
+
+  private def parquetFlags(t: String): Seq[Boolean] =
+    engine.sql(s"SELECT isParquet FROM table_partitions('$t')").collect().map(_.getBoolean(0)).toSeq
+
+  private def createWalTable(t: String): Unit = {
+    engine.sql(s"CREATE TABLE $t (x INT, ts TIMESTAMP) TIMESTAMP(ts) PARTITION BY DAY WAL")
+    engine.sql(s"INSERT INTO $t VALUES (1, '2024-01-01T10:00:00')")
+  }
+
+  test("RENAME then a timestamp-less CREATE under the old name has no designated ts") {
+    engine.sql("CREATE TABLE rn_a (x INT, ts TIMESTAMP) TIMESTAMP(ts) PARTITION BY DAY")
+    engine.sql("RENAME TABLE rn_a TO rn_b")
+    engine.sql("CREATE TABLE rn_a (x INT, t TIMESTAMP)")
+    try {
+      assert(designatedTsInTables("rn_b").contains("ts"))
+      assert(designatedTsInTables("rn_a").contains(null))
+    } finally { engine.sql("DROP TABLE rn_a"); engine.sql("DROP TABLE rn_b") }
+  }
+
+  test("DROP forgets converted partition formats; a re-created table starts native") {
+    createWalTable("cv_d")
+    engine.sql("ALTER TABLE cv_d CONVERT PARTITION TO PARQUET LIST '2024-01-01'")
+    assert(parquetFlags("cv_d") == Seq(true))
+    engine.sql("DROP TABLE cv_d")
+    createWalTable("cv_d")
+    try assert(parquetFlags("cv_d") == Seq(false))
+    finally engine.sql("DROP TABLE cv_d")
+  }
+
+  test("RENAME keeps converted partition formats under the new name") {
+    createWalTable("cv_r1")
+    engine.sql("ALTER TABLE cv_r1 CONVERT PARTITION TO PARQUET LIST '2024-01-01'")
+    engine.sql("RENAME TABLE cv_r1 TO cv_r2")
+    try assert(parquetFlags("cv_r2") == Seq(true))
+    finally engine.sql("DROP TABLE cv_r2")
+  }
+
+  test("two engines on two sessions keep separate catalogs for the same table name") {
+    // the second engine reads its own copy of the fixture tables
+    val dir2 = Files.createTempDirectory("ddl_dir2")
+    Tables.names.foreach(n => Files.copy(java.nio.file.Paths.get(s"$sfDir/$n.parquet"),
+      dir2.resolve(s"$n.parquet")))
+    val e1 = Engine(spark.newSession(), sfDir)
+    val e2 = Engine(spark.newSession(), dir2.toString)
+    e1.sql("CREATE TABLE t (k SYMBOL, v DOUBLE, ts TIMESTAMP) TIMESTAMP(ts) " +
+      "PARTITION BY DAY WAL DEDUP UPSERT KEYS(ts, k)")
+    e2.sql("CREATE TABLE t (id LONG, at TIMESTAMP, note VARCHAR) TIMESTAMP(at) " +
+      "PARTITION BY HOUR BYPASS WAL")
+    e1.sql("INSERT INTO t VALUES ('a', 1.0, '2024-01-01T00:30:00'), ('a', 2.0, '2024-01-01T00:30:00')")
+    e2.sql("INSERT INTO t VALUES (1, '2024-01-02T05:00:00', 'x'), (2, '2024-01-02T06:00:00', 'y')")
+    def tablesRow(e: Engine) =
+      e.sql("SELECT designatedTimestamp, partitionBy, walEnabled, dedup FROM tables() " +
+        "WHERE table_name = 't'").collect().map(r => (r.getString(0), r.getString(1),
+        r.getBoolean(2), r.getBoolean(3))).toSeq
+    assert(tablesRow(e1) == Seq(("ts", "DAY", true, true)))
+    assert(tablesRow(e2) == Seq(("at", "HOUR", false, false)))
+    def cols(e: Engine) =
+      e.sql("SHOW COLUMNS FROM t").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(cols(e1) == Seq(("k", "SYMBOL"), ("v", "DOUBLE"), ("ts", "TIMESTAMP")))
+    assert(cols(e2) == Seq(("id", "LONG"), ("at", "TIMESTAMP"), ("note", "VARCHAR")))
+    def ddl(e: Engine) = e.sql("SHOW CREATE TABLE t").head().getString(0)
+    assert(ddl(e1).contains("timestamp(ts) PARTITION BY DAY") &&
+      ddl(e1).contains("DEDUP UPSERT KEYS(ts,k)") && !ddl(e1).contains("BYPASS WAL"))
+    assert(ddl(e2).contains("timestamp(at) PARTITION BY HOUR BYPASS WAL") &&
+      !ddl(e2).contains("DEDUP"))
+    def walT(e: Engine) =
+      e.sql("SELECT name FROM wal_tables()").collect().map(_.getString(0)).toSet
+    assert(walT(e1).contains("t") && !walT(e2).contains("t"))
+    def parts(e: Engine) =
+      e.sql("SELECT name, numRows FROM table_partitions('t')").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    // the dedup keys collapsed e1's two rows into one
+    assert(parts(e1) == Seq(("2024-01-01", 1L)))
+    assert(parts(e2) == Seq(("2024-01-02T05", 1L), ("2024-01-02T06", 1L)))
+    def buckets(e: Engine, ts: String) =
+      e.sql(s"SELECT $ts, count() AS n FROM t SAMPLE BY 1d").collect().map(_.getLong(1)).toSeq
+    assert(buckets(e1, "ts") == Seq(1L) && buckets(e2, "at") == Seq(2L))
+    e1.sql("DROP TABLE t")
+    assert(tablesRow(e1).isEmpty)
+    assert(tablesRow(e2) == Seq(("at", "HOUR", false, false)))
+    assert(cols(e2).map(_._1) == Seq("id", "at", "note"))
+    assert(parts(e2).size == 2)
+    e2.sql("DROP TABLE t")
+  }
+
   test("COPY TO csv then COPY FROM round-trips") {
     val dir = Files.createTempDirectory("ddl_copy").toString + "/out"
     val exported = engine.sql(

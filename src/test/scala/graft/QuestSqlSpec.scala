@@ -708,8 +708,8 @@ class QuestSqlSpec extends SparkSpec {
       .select("o_custkey", "o_orderdate", "o_totalprice").createOrReplaceTempView("orders_m")
     orders.filter(col("o_orderkey") % 2 === 1)
       .select("o_custkey", "o_orderdate", "o_totalprice").createOrReplaceTempView("orders_s")
-    QuestSql.registerDesignatedTs("orders_m", "o_orderdate")
-    QuestSql.registerDesignatedTs("orders_s", "o_orderdate")
+    Seq("orders_m", "orders_s").foreach(t =>
+      SessionCatalog(spark).update(t)(_.copy(designatedTs = Some("o_orderdate"))))
     super.withFixture(test)
   }
 }
